@@ -193,8 +193,8 @@ object CatalogIndex {
     // ---- Materialized ---------------------------------------------------
     "q_ann_ivf_pre" -> "IVF over a fingerprinted materialized cell artifact",
     "q_dedup_jaccard_pre" -> "LSH bands read from a materialized band table",
-    "q_graph_pagerank_pre" -> "PageRank over a materialized edge artifact (byte-identical twin)",
-    "q_graph_reachability_pre" -> "2-hop BFS over src-bucketed edge artifact, DPP-pruned per level (byte-identical twin)",
+    "q_graph_pagerank_pre" -> "PageRank over the shared `sym_edges` grouped-adjacency artifact `(src, deg, nbrs)`: explode, then the from-scratch iteration body (byte-identical twin)",
+    "q_graph_reachability_pre" -> "2-hop BFS over the same src-bucketed `sym_edges` artifact, DPP-pruned per level, `nbrs` exploded after each probe (byte-identical twin)",
     "q_graph_triangles_pre" -> "bloom-pruned triangle count over a materialized oriented-adjacency artifact (byte-identical twin)",
     // ---- Bucketed -------------------------------------------------------
     "q_join_bucketed" -> "bucketed co-located join (zero-exchange sort-merge)",

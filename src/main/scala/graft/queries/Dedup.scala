@@ -120,11 +120,9 @@ object Dedup extends QueryGroup {
     // NOT bridge the two (the broadcast subtree canonicalizes with an
     // extra explode/distinct on top, so the band-join exchanges below it
     // end up in different stage graphs). Checkpoint it once: skinny
-    // (doc_a, doc_b) pairs, rare by construction. Measured interleaved
-    // lazy-vs-ckpt at sf0.1 (ProfileR19 vjstages): 1.19 → 0.88 s on
-    // q_dedup_jaccard; every verifyJaccard caller inherits the same cut
-    // (this subsumes the r18 call-site materialization dedupPrefix
-    // carried for the identical reason).
+    // (doc_a, doc_b) pairs, rare by construction. Interleaved
+    // lazy-vs-ckpt at sf0.1: 1.19 → 0.88 s on q_dedup_jaccard, inherited
+    // by every verifyJaccard caller (OPTIMIZATION_r19.md).
     val candM = cand.materialized
     val candIds = broadcast(candM
       .select(explode(array($"doc_a", $"doc_b")).as("doc_id")).distinct())

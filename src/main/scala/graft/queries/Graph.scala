@@ -28,36 +28,9 @@ object Graph extends QueryGroup {
   /** 1e9 fixed-point scale for PageRank ranks. */
   private val Scale = 1000000000L
 
-  /** Canonical undirected co-purchase edges (src < dst), deduplicated.
-    * Per-order fanout is bounded by lines-per-order (≤ 7), so the
-    * self-join emits O(rows × lines-per-order) pair instances — never
-    * order-count × order-count. */
-  private[queries] def coEdges(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    // Basket form, not a self-join: ONE groupBy-orderkey shuffle builds
-    // per-order sorted item sets (collect_set partial-aggregates
-    // map-side), then the src < dst upper triangle explodes ROW-LOCALLY
-    // off the sorted array — bounded by C(lines-per-order, 2) ≤ C(7,2)
-    // pairs per order — before the pair distinct. The equi-self-join
-    // formulation shuffles lineitem twice and re-sorts both sides; this
-    // moves the fact table once (the q_assoc_rules basket move).
-    // The triangle explodes through two GENERATORS (posexplode anchor +
-    // slice-tail explode), not nested transform lambdas building a
-    // struct per pair: higher-order functions evaluate interpreted per
-    // element, and the r18 assoc_rules sub-probe priced the two forms
-    // at 0.91 vs 0.48 s on the same basket relation. slice is 1-based,
-    // so start i+2 with the 0-based posexplode index yields exactly the
-    // elements after src; the downstream distinct makes pair order
-    // irrelevant. Same rows, cheaper stage, for every coEdges consumer
-    // (pagerank, triangles, reachability, linkpred, and the
-    // materialized-artifact builders).
-    pairInstances(baskets(s, d)).distinct()
-  }
-
-  /** Per-order sorted item sets — the single lineitem pass every graph
-    * build starts from (r19: extracted so the builders below share it,
-    * and so linkPred can checkpoint THIS tiny relation instead of the
-    * 1.2M-row deduplicated pair list). */
+  /** Per-order sorted item sets: the single lineitem pass every graph
+    * build starts from. One groupBy-orderkey shuffle; collect_set
+    * partial-aggregates map-side. */
   private[queries] def baskets(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.lineitem(s, d)
@@ -66,11 +39,14 @@ object Graph extends QueryGroup {
       .select($"items")
   }
 
-  /** Canonical (src < dst) pair INSTANCES off the basket arrays —
-    * coEdges WITHOUT the final distinct. Row-local generator chain; a
-    * pair that co-occurs in k orders appears k times. Consumers that
-    * tolerate duplicates (existence joins, collect_set aggregations)
-    * read this directly and skip the (src, dst)-hash dedup exchange. */
+  /** Canonical (src < dst) pair INSTANCES off the basket arrays, not
+    * deduplicated: a pair that co-occurs in k orders appears k times.
+    * Per-order fanout is C(lines-per-order, 2) ≤ C(7, 2), emitted
+    * row-locally by two generators (posexplode anchor + slice-tail
+    * explode; slice is 1-based, so start i+2 off the 0-based index is
+    * exactly the elements after src). Generators, not nested transform
+    * lambdas: those evaluate interpreted per element and priced at
+    * 0.91 s vs 0.48 s on the same baskets (OPTIMIZATION_r18.md). */
   private[queries] def pairInstances(b: DataFrame): DataFrame = {
     val s = b.sparkSession
     import s.implicits._
@@ -79,17 +55,20 @@ object Graph extends QueryGroup {
         explode(slice($"items", $"i" + lit(2), size($"items"))).as("dst"))
   }
 
-  /** One-shuffle symmetrized grouped adjacency (src, deg, nbrs), the r19
-    * graph-build core: both edge directions are generated ROW-LOCALLY
-    * off the baskets and a single groupBy(src) collect_set deduplicates,
-    * hash-partitions AND yields deg = size(nbrs) in the same pass. The
-    * r18 shape paid the coEdges (src, dst)-hash distinct exchange, then
-    * re-derived degrees and partitioning with further exchanges per
-    * consumer; every downstream relation (flat sym edges, canonical
-    * pairs, the degree table) is a row-local projection/explode of this
-    * one aggregate. Interleaved A/Bs (ProfileR19, sf0.1, arms
-    * hash-asserted): pagerank 0.86×, reachability 0.93×, triangles
-    * 0.93× on top of the generator-wedge rewrite. */
+  /** The one graph adjacency: symmetrized, deduplicated and grouped,
+    * `(src, deg, nbrs)` with deg = size(nbrs), one row per node. Both
+    * edge directions are generated row-locally off the baskets and a
+    * single groupBy(src) collect_set deduplicates, hash-partitions on
+    * src and yields the degree in the same pass. Every graph relation
+    * is a row-local projection of it: flat symmetric edges
+    * (explode nbrs), canonical pairs (explode, dst > src), the degree
+    * table (src, deg). The standing `sym_edges` artifact
+    * ([[Materialized.buildSymEdges]]) stores exactly these rows. The
+    * collect_set buffer holds deg × 8 B per node in one task, bounded
+    * by the lines-per-order fanout cap for every co-occurrence graph
+    * here; rankPack asserts deg < 2²³. Measured against the distinct +
+    * re-derived-degree builds it replaced: pagerank 0.86×,
+    * reachability 0.93× at sf0.1 (OPTIMIZATION_r19.md). */
   private[queries] def symAdjacency(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val inst = pairInstances(baskets(s, d))
@@ -103,64 +82,29 @@ object Graph extends QueryGroup {
     *
     * Shape per iteration: adjacency ⋈ ranks on src (both sides keyed on
     * the node id), then one partial-agg shuffle summing contributions
-    * per dst. The (src, dst, deg) adjacency is MATERIALIZED once
-    * (eager localCheckpoint, hash-partitioned on src — the same
-    * build-the-graph-once move as `reachability` below): left lazy, the
-    * lineitem self-join + distinct re-executes under every reference —
-    * deg, plus once per iteration — and dominated the runtime. Each
-    * iteration then finds the edge side pre-partitioned, so only the
-    * skinny rank relation moves. Ranks are fixed-point longs:
-    * contribution = r div deg, update = 0.15·Scale + 85·Σ div 100 —
-    * exact integers end to end. */
-  private def pagerank(s: SparkSession, d: String): DataFrame = {
+    * per dst. Ranks are fixed-point longs: contribution = r div deg,
+    * update = 0.15·Scale + 85·Σ div 100 — exact integers end to end. */
+  private def pagerank(s: SparkSession, d: String): DataFrame =
+    pagerankGrouped(symAdjacency(s, d))
+
+  /** PageRank over a grouped `(src, deg, nbrs)` adjacency: the
+    * from-scratch query passes [[symAdjacency]], the materialized twin
+    * (`q_graph_pagerank_pre` in [[Materialized]]) the `sym_edges`
+    * artifact that stores the same rows. The exploded (src, deg, dst)
+    * relation is MATERIALIZED once: left lazy, the adjacency build
+    * re-executes under every reference (once per iteration) and
+    * dominates the runtime. */
+  private[queries] def pagerankGrouped(grouped: DataFrame): DataFrame = {
+    val s = grouped.sparkSession
     import s.implicits._
-    // From-scratch path rides the one-shuffle symAdjacency (r19): the
-    // grouped aggregate already carries deg, so the adjacency explode is
-    // row-local and coEdges' distinct exchange never happens
-    // (ProfileR19 pr2: 0.86×, old 2.449 → new 2.117 s, on TOP of the
-    // one-pass-adjacency 0.90× this round — the materialized twin keeps
-    // pagerankOver below, whose input is the already-deduplicated
-    // artifact).
-    val adj = symAdjacency(s, d)
+    val adj = grouped
       .select($"src", $"deg", explode($"nbrs").as("dst"))
       .materialized
     pagerankIterations(adj)
   }
 
-  /** Adjacency build + iteration body over a canonical (src < dst) edge
-    * relation — the materialized-edge twin's entry (`q_graph_pagerank_pre`
-    * in [[Materialized]], whose parquet artifact is already
-    * deduplicated; the from-scratch query above skips this and builds
-    * its adjacency straight off the baskets via [[symAdjacency]]). */
-  private[queries] def pagerankOver(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    val edges = pairs.union(pairs.select($"dst".as("src"), $"src".as("dst")))
-    // ONE groupBy pass builds the whole adjacency (r19, guide §2.4):
-    // deg is size(nbrs) computed ROW-LOCALLY off the collected neighbor
-    // array, and the explode restores the (src, deg, dst) rows already
-    // hash-partitioned on src — where the r18 form paid a deg shuffle,
-    // an edges⋈deg join and an explicit repartition(src) exchange for
-    // the identical relation (interleaved A/B `ProfileR19 pr`: 0.90×,
-    // old 2.398 s / new 2.149 s at sf0.1, arms hash-asserted). The
-    // trade to name at 100 TB: the collect_list buffer holds one
-    // neighbor array per node (8 B × deg), so a pathological hub costs
-    // deg×8 bytes of agg memory in one task — bounded for every
-    // co-occurrence graph this engine declares (lines-per-order caps
-    // fanout; the ×100 probe corpus max degree is ~10³), and the
-    // orientedEdges consumer already asserts deg < 2²³ for the same
-    // reason. A graph with 100M-degree hubs would want the join form
-    // back — that regime is named, not silently assumed away.
-    val adj = edges.groupBy($"src").agg(collect_list($"dst").as("nbrs"))
-      .select($"src", size($"nbrs").cast("long").as("deg"),
-        explode($"nbrs").as("dst"))
-      .materialized
-    pagerankIterations(adj)
-  }
-
   /** The 2-iteration fixed-point body over a MATERIALIZED (src, deg,
-    * dst) adjacency hash-partitioned on src — shared by the from-scratch
-    * query (symAdjacency path) and the artifact twin (pagerankOver). */
+    * dst) adjacency. */
   private def pagerankIterations(adj: DataFrame): DataFrame = {
     val s = adj.sparkSession
     import s.implicits._
@@ -189,54 +133,35 @@ object Graph extends QueryGroup {
       .limit(100)
   }
 
-  /** Degree-ordered oriented edge set: each undirected edge {u,v} is
-    * directed from the lower-rank to the higher-rank endpoint, where
-    * rank = (degree, id) lexicographic — PACKED into one long as
-    * `deg << 40 | id`, so rank comparison is a single long compare and
-    * the edge relation stays two columns. The packing requires ids in
-    * [0, 2⁴⁰) and degrees < 2²³ (the 32/32 split of rounds ≤11 capped
-    * ids at 2³², which the ×100 key-shifted probe corpus exceeds; 2⁴⁰
-    * covers key offsets to ×10000 while 8.4M max degree still dwarfs
-    * any co-occurrence graph's). Both bounds hold by construction here
-    * and the build asserts them per row, so a violation at larger scale
-    * fails loudly rather than miscounting (the unpacked (deg, id)
-    * struct form is the drop-in general fallback for arbitrary ids). Out-degree under degree orientation is bounded
+  /** Degree rank packing for the oriented edge set: each undirected
+    * edge {u,v} is directed from the lower-rank to the higher-rank
+    * endpoint, where rank = (degree, id) lexicographic — PACKED into one
+    * long as `deg << 40 | id`, so rank comparison is a single long
+    * compare and the edge relation stays two columns. The packing
+    * requires ids in [0, 2⁴⁰) (key offsets to ×10000 of the probe
+    * corpus) and degrees < 2²³ (8.4M, far above any co-occurrence
+    * graph's); both hold by construction here and every row asserts
+    * them, so a violation at larger scale fails loudly rather than
+    * miscounting (the unpacked (deg, id) struct is the general fallback
+    * for arbitrary ids). Out-degree under degree orientation is bounded
     * by O(√(2·|E|)) — the arboricity argument behind node-iterator++
     * triangle counting — which is what tames wedge fanout on skewed
     * graphs: a hub with degree h and a small id would otherwise sit on
-    * the left of all h of its edges and emit C(h,2) wedges. The deg
-    * relation is one row per node — broadcast both probes. */
+    * the left of all h of its edges and emit C(h,2) wedges. */
   private def rankPack(id: org.apache.spark.sql.Column,
       dg: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(id < 0 || id >= (1L << 40) || dg >= (1L << 23),
-      raise_error(lit("orientedEdges: rank packing out of range")))
+      raise_error(lit("rankPack: deg or id out of packing range")))
       .otherwise(shiftleft(dg, 40).bitwiseOR(id))
       .cast("long")
 
-  private[queries] def orientedEdges(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    val deg = pairs.select($"src".as("node"))
-      .union(pairs.select($"dst".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
-    pairs
-      .join(broadcast(deg.select($"node".as("src"), $"deg".as("sdeg"))), "src")
-      .join(broadcast(deg.select($"node".as("dst"), $"deg".as("ddeg"))), "dst")
-      .select(
-        rankPack($"src", $"sdeg").as("r_src"),
-        rankPack($"dst", $"ddeg").as("r_dst"))
-      .select(
-        least($"r_src", $"r_dst").as("u"),
-        greatest($"r_src", $"r_dst").as("v"))
-  }
-
-  /** Oriented edges off a MATERIALIZED [[symAdjacency]] (r19): degrees
-    * already sit on the grouped rows, so the src-side deg is row-local
-    * and the canonical (src < dst) pairs are an explode + filter — one
-    * broadcast join (the dst-side deg) instead of orientedEdges' two,
-    * and no distinct or deg-union exchange anywhere upstream
-    * (ProfileR19 tri2: 0.93× on the whole triangle query, old 3.749 →
-    * new 3.473 s, on top of the generator-wedge 0.87×). */
+  /** Oriented edges `(u, v)` off a MATERIALIZED [[symAdjacency]]:
+    * degrees already sit on the grouped rows, so the src-side deg is
+    * row-local and the canonical (src < dst) pairs are an explode +
+    * filter — one broadcast join (the one-row-per-node dst-side deg)
+    * and no distinct or degree exchange anywhere upstream. 0.93× on the
+    * whole triangle query at sf0.1 against the distinct-edge build
+    * (OPTIMIZATION_r19.md). */
   private[queries] def orientedEdgesFromAdjacency(grouped: DataFrame): DataFrame = {
     val s = grouped.sparkSession
     import s.implicits._
@@ -335,27 +260,16 @@ object Graph extends QueryGroup {
     org.apache.spark.sql.graft.GraftSqlFunctions.ensure(s)
     // The oriented edge set has FOUR consumers (bloom build, wedge
     // generation, closure probe, snapshot guard): checkpoint it ONCE, in
-    // GROUPED (u, sorted nbrs) form (r19) — the flat (u, v) relation is
-    // a row-local explode off the checkpointed arrays, and the wedge
-    // stage is a generator chain (posexplode anchor + slice-tail
-    // explode) instead of the r18 zero-exchange SELF-JOIN: the join,
-    // even co-partitioned and exchange-free, still paid a per-partition
-    // hash build + probe over the full edge relation per wedge row,
-    // while the generators emit each of the C(out-deg, 2) pairs straight
-    // off the sorted array (interleaved A/B `ProfileR19 tri`: 0.87×,
-    // old 3.761 s / new 3.264 s at sf0.1, arms hash-asserted — the same
-    // generator-beats-machinery result as r18's assoc_rules pair
-    // explode; slice is 1-based, so start i+2 off the 0-based posexplode
-    // index = exactly the elements after b, preserving b < c in rank
-    // order). groupBy(u) replaces the old repartition(u) — its output is
-    // already hash(u)-partitioned — and the array rows checkpoint
-    // strictly smaller than the exploded form.
-    // r19 second pass: the oriented edges come off a materialized
-    // symAdjacency (one shuffle builds dedup + degrees + partitioning;
-    // see orientedEdgesFromAdjacency) instead of orientedEdges(coEdges)
-    // — which paid the distinct exchange, a deg-union exchange and two
-    // broadcast joins, re-running coEdges' post-exchange dedup under
-    // each of its three consumers.
+    // GROUPED (u, sorted nbrs) form off a materialized symAdjacency. The
+    // flat (u, v) relation is a row-local explode off the checkpointed
+    // arrays; groupBy(u) leaves the rows hash(u)-partitioned, and the
+    // array rows checkpoint strictly smaller than the exploded form.
+    // Wedges are a generator chain (posexplode anchor + slice-tail
+    // explode; slice is 1-based, so start i+2 off the 0-based index =
+    // exactly the elements after b, preserving b < c in rank order):
+    // 0.87× against an exchange-free wedge self-join at sf0.1, which
+    // still paid a hash build + probe per wedge row
+    // (OPTIMIZATION_r19.md).
     val grouped = symAdjacency(s, d).materialized
     val gr = orientedEdgesFromAdjacency(grouped)
       .groupBy($"u").agg(sort_array(collect_list($"v")).as("nbrs"))
@@ -462,9 +376,9 @@ object Graph extends QueryGroup {
     // The closure side is the GROUPED adjacency joined on the single
     // key u, with the closing edge verified by binary search over the
     // sorted nbrs array (graft's `sorted_contains_long`) — NOT the flat
-    // (u, v) view hashed on the pair key (r19 second pass; A/B
-    // 0.76×/0.78× across two fresh JVMs, ProfileR19 tri3). Same bytes
-    // transported, but the hash relation holds one row per NODE instead
+    // (u, v) view hashed on the pair key: 0.76×/0.78× at sf0.1 across
+    // two JVMs (OPTIMIZATION_r19.md). Same bytes transported, but the
+    // hash relation holds one row per NODE instead
     // of one per EDGE (~60× fewer at sf0.1), so the broadcast collect +
     // build shrink accordingly, and each wedge probes one long key +
     // log₂(out-deg) compares instead of hashing the pair. Degree
@@ -581,28 +495,18 @@ object Graph extends QueryGroup {
     * CC, q_graph_pagerank's fixed-iteration loop). */
   private def reachability(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // Materialize the symmetrized adjacency ONCE (eager localCheckpoint,
+    // Materialize the grouped adjacency ONCE (eager localCheckpoint,
     // same precedent as q_dedup_cluster's CC loop): a plain CTE would be
-    // INLINED into the recursive step, re-running the lineitem self-join
-    // + distinct on every UnionLoop iteration — measured 5.0 s at sf0.1,
-    // ~4 edge-build executions (anchor scalar + one per level). The
-    // iterative executor should walk a built graph, not rebuild it.
-    // r19: the build rides symAdjacency — one groupBy(src) shuffle
-    // dedups, partitions AND symmetrizes (the r18 form paid coEdges'
-    // (src,dst) distinct exchange, ran its post-exchange dedup once per
-    // union branch, then repartitioned on src: ProfileR19 reach A/B
-    // 0.93×, old 3.386 → new 3.132 s).
-    // r19 second pass: the checkpoint stays GROUPED — (src, nbrs), one
-    // row per node — and the recursive term explodes the neighbor array
-    // AFTER the frontier join (guide §3.3: join on the un-exploded key,
-    // explode after). Each UnionLoop level now hash-builds/scans the
-    // node-count relation instead of the edge-count one (20k vs 2.4M
-    // rows at sf0.1 — same bytes), and only the MATCHED frontier rows
-    // explode their arrays, so per-level work tracks the frontier's
-    // neighborhood instead of the whole edge relation. A/B 0.58×/0.60×
-    // across two fresh JVMs (ProfileR19 reach3, old 4.83 → new 2.79 s).
-    // The recursive-CTE formulation (Spark 4 UnionLoop) remains the
-    // declared capability row.
+    // INLINED into the recursive step, re-running the edge build on
+    // every UnionLoop iteration — measured 5.0 s at sf0.1, ~4 edge-build
+    // executions (anchor scalar + one per level). The checkpoint stays
+    // GROUPED — (src, nbrs), one row per node — and the recursive term
+    // explodes the neighbor array AFTER the frontier join, so each level
+    // hash-builds the node-count relation instead of the edge-count one
+    // (20k vs 2.4M rows at sf0.1) and only matched frontier rows
+    // explode: 0.58×/0.60× against the flat-edge checkpoint across two
+    // JVMs (OPTIMIZATION_r19.md). The recursive-CTE formulation (Spark 4
+    // UnionLoop) remains the declared capability row.
     // Per-invocation view name — same concurrent create/drop race as
     // triangles' oriented-edge view.
     val vn = s"graph_sym_${java.util.UUID.randomUUID.toString.take(8)}"
@@ -646,35 +550,23 @@ object Graph extends QueryGroup {
     * many co-purchase neighbors they share — the classic "customers who
     * bought X also bought Y" recommendation score.
     *
-    * Shape (r19 second pass): per-node sorted neighbor lists CAPPED at
-    * [[LinkPredCap]] (smallest ids — deterministic; uncapped
-    * common-neighbor counting IS the all-wedges problem, and top-K under
-    * a documented per-node sample is the standard large-graph variant).
-    * ONE [[symAdjacency]] checkpoint now feeds everything: the capped
-    * array is a row-local slice(sort_array(nbrs)) of the grouped row,
-    * wedges are the posexplode-anchor + slice-tail-explode generator
-    * chain straight off that array (sorted ascending, so node_a < node_b
-    * falls out of the generator order), and the anti-join probe side is
-    * a row-local explode filtered dst > src. The r18 shape paid the
-    * coEdges (src, dst)-hash distinct + a 1.2M-row pair checkpoint + a
-    * separate capped groupBy + repartition(u) checkpoint + the wedge
-    * SELF-JOIN machinery; all of that collapses into the one adjacency
-    * groupBy. Interleaved A/B (ProfileR19 lp3, arms hash-asserted,
-    * sf0.1): 0.64× and 0.74× across two fresh JVMs.
-    *
-    * Why this won where two near-identical r19 candidates measured
-    * parity: `lp` kept the coEdges checkpoint AND added a second grouped
-    * checkpoint (generator saving inside noise); `lp2` dropped the
-    * checkpoints but re-generated the pair-instance stream three times.
-    * Here the instance stream is generated ONCE (into the symAdjacency
-    * groupBy) and every consumer is a row-local projection of the
-    * result.
+    * Shape: per-node sorted neighbor lists CAPPED at [[LinkPredCap]]
+    * (smallest ids — deterministic; uncapped common-neighbor counting
+    * IS the all-wedges problem, and top-K under a documented per-node
+    * sample is the standard large-graph variant). ONE [[symAdjacency]]
+    * checkpoint feeds everything: the capped array is a row-local
+    * slice(sort_array(nbrs)) of the grouped row, wedges are the
+    * posexplode-anchor + slice-tail-explode generator chain straight
+    * off that array (sorted ascending, so node_a < node_b falls out of
+    * the generator order), and the anti-join probe side is a row-local
+    * explode filtered dst > src. The pair-instance stream is generated
+    * once, into the adjacency groupBy: 0.64× and 0.74× at sf0.1 across
+    * two JVMs against a distinct-edge checkpoint + wedge self-join
+    * (OPTIMIZATION_r19.md).
     *
     * Scale notes: the wedge multiset is C(cap,2)-bounded per node and
     * flows straight into its (node_a, node_b) partial agg — no join to
-    * sort, which also retires the r18 LinkPredShuffleJoinMinRows gate
-    * (its ×100 cell existed to stop SMJ sorting the wedge stream; there
-    * is no wedge join left to demote). The anti join is hinted
+    * sort, so no shuffle-join size gate is needed. The anti join is hinted
     * SHUFFLE_HASH unconditionally: the flat edge side is a skinny
     * projection of a LogicalRDD (no stats, so it would never
     * auto-broadcast) and a hash build over id-pair rows needs no sort at

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Checkpoints.MaterializeOps
 
-/** Materialized-artifact variants of the dedup/ANN operators — the
+/** Materialized-artifact variants of the dedup/ANN/graph operators — the
   * "at 100 TB the sigs/bands/cells are computed once and reused" design
   * made real (see the in-code notes in [[Dedup.bandTable]] /
   * [[Similarity.ivfAssignment]]).
@@ -24,8 +24,11 @@ import graft.core.Checkpoints.MaterializeOps
   *    The probe join broadcasts the query probes, so dynamic partition
   *    pruning drops the 14 unprobed cell directories from the scan —
   *    the probe touches 2/16 of the data on disk, not just logically.
+  *  - `q_graph_pagerank_pre` / `q_graph_reachability_pre`: ONE grouped
+  *    adjacency artifact, `sym_edges`, src-bucketed on disk;
+  *    `q_graph_triangles_pre`: the degree-oriented adjacency.
   *
-  * Both return byte-identical results to their from-scratch twins and are
+  * All return byte-identical results to their from-scratch twins and are
   * checked against the same DuckDB oracle SQL. Artifacts land under
   * `target/artifacts/<sf-dir-slug>/` — derived deterministically from
   * static testdata, so the marker-file cache is safe; a real deployment
@@ -60,14 +63,30 @@ object Materialized extends QueryGroup {
   private def artDir(d: String, name: String, fp: String): String =
     s"target/artifacts/${d.replaceAll("[^A-Za-z0-9._-]", "_")}/${name}_$fp"
 
-  private def ensure(path: String)(build: => Unit): Unit =
-    if (!new File(s"$path/_SUCCESS").exists()) build
+  /** Per-artifact-path build locks (JVM-wide). */
+  private val buildLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** Single-flight build: run `build` unless the `sentinel` file (by
+    * default the writer's `_SUCCESS`) exists. Builds of one path are
+    * serialized inside the JVM and the sentinel is re-checked under the
+    * lock, so concurrent first calls (two twins sharing `sym_edges`)
+    * build once instead of racing two `overwrite` writes into one
+    * directory. */
+  private def ensure(path: String, sentinel: String = "_SUCCESS")(
+      build: => Unit): Unit = {
+    val done = new File(s"$path/$sentinel")
+    if (!done.exists())
+      buildLocks.computeIfAbsent(path, _ => new Object).synchronized {
+        if (!done.exists()) build
+      }
+  }
 
   /** Session-scoped resolved-relation cache for the immutable artifacts.
     * Why: `spark.read.parquet` builds a fresh InMemoryFileIndex per
     * call, and at the ×100 scale probe the sym-edges layout's ~2k
     * directories cost 5.4 s of the query's 6.4 s total JUST in
-    * re-listing (r18 `ProfileR18 reachpre`) — a per-construction driver
+    * re-listing (SCALE_PROBE.md) — a per-construction driver
     * cost a real deployment amortizes through its table catalog (a
     * metastore or Delta log caches the file listing; re-enumerating an
     * immutable table per query is not a cost any production reader
@@ -81,8 +100,7 @@ object Materialized extends QueryGroup {
     * lifecycle IS the session's. The earlier cut used an external
     * `WeakHashMap[SparkSession, DataFrame]`, which can never collect:
     * the cached DataFrame strongly references its session through
-    * `queryExecution`, defeating the weak key (r18 review — the same
-    * unbounded-driver-leak shape the r16 Broadcasts advisor hit). */
+    * `queryExecution`, defeating the weak key. */
   private def readCached(s: SparkSession, path: String): DataFrame = {
     val vn = "graft_artifact_" + fingerprint(path)
     synchronized {
@@ -119,33 +137,19 @@ object Materialized extends QueryGroup {
     path
   }
 
-  // Edge definition has no tunable constants; version the layout.
-  private val coEdgesFp = fingerprint("coedges|order-pair-v1")
-
-  /** One-time build: persist the canonical co-purchase edge list — the
-    * graph analogue of the band/cell artifacts: every graph analytic
-    * (PageRank, triangles, reachability, CC) starts from this relation,
-    * and at 100 TB the lineitem self-join + distinct that derives it is
-    * exactly what a deployment computes once, not per query. */
-  def buildCoEdges(s: SparkSession, d: String): String = {
-    val path = artDir(d, "co_edges", coEdgesFp)
-    ensure(path) {
-      Graph.coEdges(s, d).write.mode("overwrite").parquet(path)
-    }
-    path
-  }
-
+  /** Materialized twin of `q_graph_pagerank`: the same code path
+    * ([[Graph.pagerankGrouped]]) over the standing [[buildSymEdges]]
+    * adjacency instead of re-deriving it from lineitem per query. */
   private def pagerankPre(s: SparkSession, d: String): DataFrame =
-    Graph.pagerankOver(s.read.parquet(buildCoEdges(s, d)))
+    Graph.pagerankGrouped(readCached(s, buildSymEdges(s, d)))
 
   // Content depends on the degree-rank packing (deg << 40 | id) and the
   // sorted-array layout; version both so a packing change rebuilds.
   private val orientedAdjFp = fingerprint("orientedadj|pack40|sorted-v1")
 
   /** One-time build: the GROUPED degree-oriented adjacency
-    * (u, sorted nbrs) — the storage-side artifact for triangle counting
-    * (r18 "Not yet optimized" item 1; the pagerank_pre/reachability_pre
-    * precedent). At 100 TB the degree orientation (a global degree count
+    * (u, sorted nbrs) — the storage-side artifact for triangle counting.
+    * At 100 TB the degree orientation (a global degree count
     * + rank packing over every edge) is computed once per corpus
     * version, not per query: the per-query cost left is bloom build +
     * wedge generation + closure probe, all row-local or
@@ -172,61 +176,53 @@ object Materialized extends QueryGroup {
       readCached(s, buildOrientedAdjacency(s, d)),
       Graph.TriangleBloomBucketItems, Graph.TriangleScalarMaxEdges)
 
-  /** Bucket sizing for the symmetrized-edge artifact: the count is
-    * DERIVED FROM THE EDGE VOLUME so each directory holds a roughly
-    * constant number of rows. This is the property that makes the BFS
+  /** Bucket sizing for the sym-edges artifact: the count is DERIVED
+    * FROM THE EDGE VOLUME (Σ deg) so each directory holds a roughly
+    * constant number of edges. This is the property that makes the BFS
     * probe scale-independent: a constant-size frontier touches a
     * bounded number of buckets, and constant bucket size means the
     * bytes read per level stop growing with the corpus — a fixed
-    * bucket count would instead make every touched bucket grow
-    * linearly (the first r18 cut measured exactly that: d2 ≈ 0.92 at
-    * 64 fixed buckets, still linear-dominated). The floor keeps small
-    * test SFs from degenerating to one directory. */
+    * bucket count makes every touched bucket grow linearly (d2 ≈ 0.92
+    * at 64 fixed buckets, SCALE_PROBE.md). The floor keeps small test
+    * SFs from degenerating to one directory. */
   private[queries] val SymEdgeRowsPerBucket = 65536L
   private[queries] val SymEdgeMinBuckets = 64
 
   private val symEdgesFp = fingerprint(
-    s"symedges|rpb=$SymEdgeRowsPerBucket|min=$SymEdgeMinBuckets|meta-v2")
+    s"symedges|rpb=$SymEdgeRowsPerBucket|min=$SymEdgeMinBuckets|grouped-v3")
 
-  /** One-time build: the SYMMETRIZED edge list laid out in
-    * hash-of-src directory partitions (count from [[SymEdgeRowsPerBucket]]),
-    * plus a `_graft_meta` sidecar carrying (bucket count, BFS anchor =
-    * global min src). This is the storage-side fix the r17 ×100
-    * reachability cell named (SCALE_PROBE.md): the recursive-CTE twin
-    * re-probes every edge block per BFS level even when the frontier is
-    * a handful of nodes; a src-bucketed layout lets each level's probe
-    * prune to the frontier's buckets at the DIRECTORY level via dynamic
-    * partition pruning — the same mechanism `q_join_dpp` demonstrates
-    * on the fact-dim shape. The anchor lives in the sidecar because it
-    * is a property of the artifact: computing `min(src)` per query is a
-    * full linear scan that would dominate the otherwise
-    * frontier-proportional probe cost (the other r18 ×100 linear term).
+  /** One-time build: the [[Graph.symAdjacency]] rows `(src, deg, nbrs)`
+    * laid out in hash-of-src directory partitions `sb` (count from
+    * [[SymEdgeRowsPerBucket]]), plus a `_graft_meta` sidecar carrying
+    * (bucket count, BFS anchor = global min src). One artifact serves
+    * `q_graph_pagerank_pre` (explode, then the from-scratch iteration
+    * body) and `q_graph_reachability_pre` (bucket-pruned probes). The
+    * src-bucketed layout lets each BFS level's probe prune to the
+    * frontier's buckets at the DIRECTORY level via dynamic partition
+    * pruning — the mechanism `q_join_dpp` demonstrates on the fact-dim
+    * shape — where the recursive-CTE twin re-probes every edge block
+    * per level. The anchor lives in the sidecar because it is a
+    * property of the artifact: `min(src)` per query is a full scan.
     * The sidecar directory is underscore-prefixed, so the partitioned
     * read ignores it; the build sentinel is the SIDECAR's `_SUCCESS`,
     * written last — a crash mid-build leaves no sentinel and rebuilds. */
   def buildSymEdges(s: SparkSession, d: String): String = {
     val path = artDir(d, "sym_edges", symEdgesFp)
-    if (!new File(s"$path/_graft_meta/_SUCCESS").exists()) {
+    ensure(path, "_graft_meta/_SUCCESS") {
       import s.implicits._
-      val pairs = Graph.coEdges(s, d)
-      val sym = pairs
-        .union(pairs.select($"dst".as("src"), $"src".as("dst")))
-      // One extra pass at BUILD time (amortized across every read):
-      // edge count sizes the layout, min(src) is the BFS anchor.
-      val (nEdges, anchor) = {
-        val r = sym.agg(count(lit(1)), min($"src")).head
-        // Loud guard (r18 review): an edge-free corpus would write an
-        // empty partitioned artifact (unreadable — no schema) and a
-        // phantom anchor; the CTE twin is the right surface for
-        // degenerate graphs.
-        require(r.getLong(0) > 0L,
-          s"buildSymEdges($d): no co-purchase edges — " +
-            "use q_graph_reachability (the CTE twin) on this corpus")
-        (r.getLong(0), r.getLong(1))
-      }
+      val adj = Graph.symAdjacency(s, d).materialized
+      // Edge volume sizes the layout; min(src) is the BFS anchor.
+      val r = adj.agg(sum($"deg"), min($"src")).head
+      // An edge-free corpus would write an empty partitioned artifact
+      // (unreadable — no schema) and a phantom anchor; the CTE twin is
+      // the right surface for degenerate graphs.
+      require(!r.isNullAt(0),
+        s"buildSymEdges($d): no co-purchase edges — " +
+          "use q_graph_reachability (the CTE twin) on this corpus")
+      val (nEdges, anchor) = (r.getLong(0), r.getLong(1))
       val nb = math.max(SymEdgeMinBuckets.toLong,
         (nEdges + SymEdgeRowsPerBucket - 1) / SymEdgeRowsPerBucket).toInt
-      sym
+      adj
         .withColumn("sb", pmod(xxhash64($"src"), lit(nb)).cast("int"))
         // One file per directory: repartition ON the partition column
         // with one task per bucket value.
@@ -250,9 +246,11 @@ object Materialized extends QueryGroup {
     * STATIC partition filter (the anchor and its bucket are literals
     * from the artifact sidecar — one directory read); level 1 probes
     * through a broadcast join on (src, sb) whose dynamic partition
-    * pruning narrows the scan to the frontier's buckets. The CTE twin's
-    * measured d2 ≈ 1.12 (r17 ×100 cell) came from re-probing the FULL
-    * edge relation per UnionLoop level; here the per-query cost is
+    * pruning narrows the scan to the frontier's buckets. Each level
+    * explodes `nbrs` only after its filter or join, so the probes
+    * match node rows, not edge rows. The CTE twin's measured d2 ≈ 1.12
+    * (×100 cell, SCALE_PROBE.md) came from re-probing the FULL edge
+    * relation per UnionLoop level; here the per-query cost is
     * O(frontier buckets) of CONSTANT size (bucket count scales with the
     * edge volume), with no full scan anywhere — the anchor derivation
     * moved to build time. The frontier never touches the driver: it
@@ -286,14 +284,14 @@ object Materialized extends QueryGroup {
     // Level 0: static pruning — one directory, then the src equality.
     val hop1 = edges
       .filter($"sb" === lit(anchorBucket) && $"src" === lit(anchorId))
-      .select($"dst")
+      .select(explode($"nbrs").as("dst"))
     // Level 1: DPP — the frontier's buckets only.
     val frontier = hop1.select($"dst".as("node")).distinct()
       .filter($"node" >= 0L)
       .withColumn("fb", pmod(xxhash64($"node"), lit(nb)).cast("int"))
     val hop2 = edges.join(broadcast(frontier),
       $"src" === $"node" && $"sb" === $"fb")
-      .select($"dst")
+      .select(explode($"nbrs").as("dst"))
     val reach =
       Seq(anchorId).toDF("node").select($"node", lit(0).as("depth"))
         .unionAll(hop1.select($"dst".as("node"), lit(1).as("depth")))

@@ -80,12 +80,12 @@ object Mining extends QueryGroup {
     // pa < pb by sortedness, each unordered pair exactly once.
     // Upper triangle via two GENERATORS (posexplode anchor + slice
     // explode of the tail), not nested transform lambdas: higher-order
-    // functions evaluate interpreted per element (the r17 ANN-plane /
-    // r18 equidepth lesson), and building a struct per pair inside two
-    // nested lambdas priced at 0.91 s vs 0.48 s for the generator form
-    // on the same checkpointed baskets (ProfileR18 assoc2). Same pair
-    // multiset: slice is 1-based, so slice(items, i+2, n) with the
-    // 0-based posexplode index i yields exactly the elements after pa.
+    // functions evaluate interpreted per element, and building a struct
+    // per pair inside two nested lambdas priced at 0.91 s vs 0.48 s for
+    // the generator form on the same checkpointed baskets
+    // (OPTIMIZATION_r18.md). Same pair multiset: slice is 1-based, so
+    // slice(items, i+2, n) with the 0-based posexplode index i yields
+    // exactly the elements after pa.
     val pairs = perOrder
       .select($"items", posexplode($"items").as(Seq("i", "pa")))
       .select($"pa",

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, functions}
 
 /** Timing/equality probe for the r15 partitioned closure bloom in
   * `q_graph_triangles` (Graph.trianglesWithBloomBucketItems).
@@ -56,8 +56,9 @@ object TriangleBloomProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val edgeRows =
-      Graph.orientedEdges(Graph.coEdges(spark, sfDir)).count()
+    // Each undirected edge sits in both endpoints' neighbor arrays.
+    val edgeRows = Graph.symAdjacency(spark, sfDir)
+      .agg(functions.sum("deg")).head().getLong(0) / 2
 
     val results = bucketCounts.map { tok =>
       val forceBroadcast = tok.endsWith("b")

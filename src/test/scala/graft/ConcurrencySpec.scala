@@ -67,6 +67,21 @@ class ConcurrencySpec extends SparkTestBase {
       "interleaved triangles/bloom run left a session-conf delta")
   }
 
+  test("graph twins racing on a missing sym_edges artifact build it once") {
+    // q_graph_pagerank_pre and q_graph_reachability_pre read ONE
+    // artifact; two first calls must not both overwrite its directory.
+    val twins = Seq("q_graph_pagerank_pre", "q_graph_reachability_pre")
+    val sequential = twins.map(n => n -> rows(n)).toMap
+    deleteArtifacts("sym_edges_")
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val concurrent = Await.result(
+      Future.sequence((twins ++ twins).map(n => Future(n -> rows(n)))),
+      5.minutes)
+    concurrent.foreach { case (n, got) =>
+      assert(got == sequential(n), s"$n diverged under a racing build")
+    }
+  }
+
   test("the same query racing itself 8-ways stays deterministic") {
     implicit val ec: ExecutionContext = ExecutionContext.global
     val racers = Await.result(

@@ -39,6 +39,26 @@ class GraphSpec extends SparkTestBase {
     assert(got == expected)
   }
 
+  test("graph rows and their _pre twins do not depend on the shuffle partition count") {
+    val names = Seq("q_graph_pagerank", "q_graph_triangles",
+      "q_graph_reachability", "q_graph_linkpred", "q_graph_pagerank_pre",
+      "q_graph_reachability_pre", "q_graph_triangles_pre")
+    def rowsAt(partitions: Int): Seq[Seq[String]] = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", partitions.toLong)
+      names.map(n =>
+        SparkEntry.queries(n)(s, Sf0001).collect().toSeq.map(_.toString))
+    }
+    val at4 = rowsAt(4)
+    assert(at4.forall(_.nonEmpty))
+    for (p <- Seq(1, 7)) {
+      val got = rowsAt(p)
+      names.indices.foreach { i =>
+        assert(got(i) == at4(i), s"${names(i)} differs at $p partitions")
+      }
+    }
+  }
+
   test("triangle count matches an independent enumeration") {
     val nbrs = edges.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
