@@ -65,7 +65,7 @@ object PipelineSmoke {
     Populate.lookupSkills(published, jobId).show(false)
 
     println("=== Q3 join ===")
-    Populate.jobsWithSkills(published).show(false)
+    Populate.jobsWithSkills(Populate.listJobs(published), published).show(false)
 
     // S15 sink against the durable file-backed store: executor tasks
     // append to per-task logs, then the read-back goes through a FRESH

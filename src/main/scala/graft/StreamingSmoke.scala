@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, concat_ws}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.FileKvStore
@@ -44,11 +45,13 @@ object StreamingSmoke {
 
     val events = EventsStreaming.fileSource(spark, inDir)
     val counts = EventsStreaming.tumblingCounts(events)
+      .withColumn("key", concat_ws("|", col("window_start").cast("string"),
+        col("event_type")))
     // foreachPartition upserts on executors (no driver collect), durable
     // on disk under work/store.
-    val store = new FileKvStore(s"$work/store")
-    val q = EventsStreaming.foreachBatchUpsert(counts, store,
-      Seq("window_start", "event_type"), Some(Trigger.AvailableNow()))(ckpt)
+    val sink = new FileKvStore(s"$work/store").rowSink("key")
+    val q = EventsStreaming.foreachBatchUpsert(counts, sink,
+      Some(Trigger.AvailableNow()))(ckpt)
     q.awaitTermination()
     println("=== upserted window counts (read back from disk) ===")
     val back = FileKvStore.read(s"$work/store")

@@ -124,10 +124,7 @@ object Maintenance extends QueryGroup {
   private def kvCdc(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val out = "target/tmp/sources/orders_kv_cdc"
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(out))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     val base = Tables.orders(s, d)
       .select($"o_orderkey", $"o_orderstatus", $"o_orderpriority")
     def kv(df: DataFrame): DataFrame = df.select(

@@ -2,15 +2,18 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.core.Tables
 import graft.functions.TextFunctions._
-import graft.functions.Uuid5.uuid5
+import graft.functions.Uuid5.{uuid5, uuid5Jvm}
+import graft.pipelines.Populate
 import Catalog._
 
-/** Serving-layer surface: the reference's populate + serve stages re-expressed
-  * as queries over the published top-skills result.
+/** Serving-layer surface: the reference's populate + serve stages as
+  * queries over the published top-skills rows. The ranking, pivot, Q2 and
+  * Q3 are [[graft.pipelines.Populate]]'s own, run over `documents` with
+  * each `source` as one job; this group adds the jobs dimension, the
+  * output order and the oracle SQL.
   *
   *  - uuid5 surrogate keys (`/root/reference/data_populator/populator.py:53`)
   *  - array → `top_skill_n_1..10` wide pivot (`populator.py:55-57`, P8)
@@ -93,74 +96,37 @@ object Serving extends QueryGroup {
       .orderBy($"n_name")
   }
 
-  /** Flagship ranked skills (source, rnk, token) — shared input. */
-  private def ranked(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val dict = broadcast(SkillsDict.toDF("skill"))
-    val counts = Tables.documents(s, d)
-      .select($"source", explode(tokens($"text")).as("token"))
-      .join(dict, $"token" === $"skill", "left_semi")
-      .groupBy($"source", $"token")
-      .agg(count(lit(1)).as("cnt"))
-    counts.withColumn("rnk", row_number().over(
-      Window.partitionBy($"source").orderBy($"cnt".desc, $"token")))
-      .filter($"rnk" <= 10)
-  }
+  /** The published wide rows, one per source: [[Populate.publish]] over the
+    * flagship's ranking ([[TextAnalysis.rankedSources]]). */
+  private def wide(s: SparkSession, d: String): DataFrame =
+    Populate.publish(TextAnalysis.rankedSources(s, d))
 
-  /** Published wide row: job_id + top_skill_n_1..10 (reference P8 pivot). */
-  private def wide(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val arr = ranked(s, d)
-      .groupBy($"source")
-      .agg(array_sort(collect_list(struct($"rnk", $"token"))).as("rs"))
-      .select($"source", transform($"rs", r => r.getField("token")).as("ts"))
-    // try_element_at: null-pads when a source has < 10 ranked skills
-    // (strict element_at throws under ANSI-default Spark 4) — matches
-    // Populate.publish's semantics for the same pivot.
-    arr.select(
-      (uuid5($"source").as("job_id") +: $"source".as("job") +:
-        (1 to 10).map(i =>
-          try_element_at($"ts", lit(i)).as(s"top_skill_n_$i"))): _*)
-  }
-
-  /** Q1: list-all jobs dimension. */
-  private def servingJobs(s: SparkSession, d: String): DataFrame = {
+  /** The `(job_id, job)` jobs dimension: every source of `documents`. */
+  private def jobs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, d)
       .select($"source").distinct()
       .select(uuid5($"source").as("job_id"), $"source".as("job"))
-      .orderBy($"job")
   }
+
+  /** Q1: list-all jobs dimension. */
+  private def servingJobs(s: SparkSession, d: String): DataFrame =
+    jobs(s, d).orderBy("job")
 
   /** P8: the published wide pivot itself. */
-  private def servingPivot(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    wide(s, d).orderBy($"job")
-  }
+  private def servingPivot(s: SparkSession, d: String): DataFrame =
+    wide(s, d).orderBy("job")
 
-  /** Q2: point lookup by surrogate key + positional unpack to ranked list. */
-  private def servingLookup(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    wide(s, d)
-      .filter($"job_id" === uuid5(lit("src7")))
-      .select($"job_id", posexplode(
-        array((1 to 10).map(i => col(s"top_skill_n_$i")): _*)))
-      .toDF("job_id", "pos", "skill")
-      .select($"job_id", ($"pos" + 1).as("rank"), $"skill")
-      .orderBy($"rank")
-  }
+  /** Q2: point lookup of `src7` by surrogate key, unpacked to ranks. */
+  private def servingLookup(s: SparkSession, d: String): DataFrame =
+    Populate.lookupSkills(wide(s, d), uuid5Jvm("src7")).orderBy("rank")
 
   /** Q3: jobs ⋈ top_skills — the join the reference does client-side. */
-  private def servingJoin(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val jobs = Tables.documents(s, d)
-      .select($"source").distinct()
-      .select(uuid5($"source").as("job_id"), $"source".as("job"))
-    jobs.join(wide(s, d).drop("job"), Seq("job_id"))
-      .select($"job", $"job_id", $"top_skill_n_1", $"top_skill_n_2",
-        $"top_skill_n_3")
-      .orderBy($"job")
-  }
+  private def servingJoin(s: SparkSession, d: String): DataFrame =
+    Populate.jobsWithSkills(jobs(s, d), wide(s, d))
+      .select("job", "job_id", "top_skill_n_1", "top_skill_n_2",
+        "top_skill_n_3")
+      .orderBy("job")
 
   /** The same uuid5 keys through the SQL registry surface
     * ([[graft.functions.GraftFunctions]]) — `spark.sql` callers get the
@@ -181,9 +147,6 @@ object Serving extends QueryGroup {
     "q_serving_lookup" -> servingLookup,
     "q_serving_join" -> servingJoin,
   )
-
-  private def skillsDictSql: String =
-    SkillsDict.map(x => s"'$x'").mkString("(", ", ", ")")
 
   /** DuckDB CTE producing (source, ordered top-10 token list). */
   private val rankedListCte =
@@ -229,7 +192,7 @@ object Serving extends QueryGroup {
          |SELECT '69aac5bc-9adf-5e39-b952-792a220a1d44' AS job_id,
          |  CAST(i AS INT) AS rank, ts[i] AS skill
          |FROM ranked, (SELECT unnest(range(1, 11)) i) ii
-         |WHERE source = 'src7'
+         |WHERE source = 'src7' AND ts[i] IS NOT NULL
          |ORDER BY rank""".stripMargin,
     "q_serving_join" ->
       s"""$rankedListCte

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -331,30 +332,34 @@ object Sources extends QueryGroup {
       .orderBy($"status")
   }
 
-  /** KV-connector round-trip through the [[graft.sources.kv.KvDataSource]]
-    * DataSourceV2 surface (the reference's populate→DynamoDB→serve
-    * boundary, `populator.py:47-58` → `index.py:16-25`, as a real Spark
-    * connector): a deterministic orders slice is PUBLISHED through
-    * `write.format("graftkv")` (per-task buffered log segments), then
-    * read back through `read.format("graftkv")` with a key-PREFIX
-    * predicate the source claims via filter pushdown — the point lookup
-    * never materializes the full store into the query. The store
-    * directory is wiped first: the log is append-only, and the oracle
+  /** Publishes a deterministic orders slice (every 100th order key, as
+    * `order:<key>` → `status,custkey`) through `write.format("graftkv")`
+    * (per-task buffered log segments) into a fresh store at `tmp(name)`.
+    * The directory is wiped first: the log is append-only, and the oracle
     * pins exactly one published generation. */
-  private def kvRoundtrip(s: SparkSession, d: String): DataFrame = {
+  private def publishOrdersKv(s: SparkSession, d: String, name: String): String = {
     import s.implicits._
-    val out = tmp("orders_kv")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(out))
+    val out = tmp(name)
+    FileUtils.deleteQuietly(new java.io.File(out))
     Tables.orders(s, d)
       .filter($"o_orderkey" % 100 === 0)
       .select(concat(lit("order:"), $"o_orderkey".cast("string")).as("key"),
         concat_ws(",", $"o_orderstatus", $"o_custkey".cast("string"))
           .as("value"))
       .write.format("graftkv").mode("append").save(out)
-    s.read.format("graftkv").load(out)
+    out
+  }
+
+  /** KV-connector round-trip through the [[graft.sources.kv.KvDataSource]]
+    * DataSourceV2 surface (the reference's populate→DynamoDB→serve
+    * boundary, `populator.py:47-58` → `index.py:16-25`, as a real Spark
+    * connector): the [[publishOrdersKv]] store is read back through
+    * `read.format("graftkv")` with a key-PREFIX predicate the source
+    * claims via filter pushdown — the point lookup never materializes the
+    * full store into the query. */
+  private def kvRoundtrip(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    s.read.format("graftkv").load(publishOrdersKv(s, d, "orders_kv"))
       .filter($"key".startsWith("order:1"))
       .orderBy($"key")
   }
@@ -362,25 +367,14 @@ object Sources extends QueryGroup {
   /** Point lookups through the connector — the reference's GET-by-id
     * serving call (`index.py:16-25`) as a Spark read: an IN-list of keys
     * is claimed by the source's filter pushdown, so only those keys
-    * survive log replay into the scan. Same published store derivation
-    * as [[kvRoundtrip]], its own directory (catalog queries stay
+    * survive log replay into the scan. Same [[publishOrdersKv]] store as
+    * [[kvRoundtrip]], its own directory (catalog queries stay
     * self-contained). */
   private def kvLookup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = tmp("orders_kv_lookup")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(out))
-    Tables.orders(s, d)
-      .filter($"o_orderkey" % 100 === 0)
-      .select(concat(lit("order:"), $"o_orderkey".cast("string")).as("key"),
-        concat_ws(",", $"o_orderstatus", $"o_custkey".cast("string"))
-          .as("value"))
-      .write.format("graftkv").mode("append").save(out)
     val wanted = Seq(100L, 700L, 1300L, 2500L)
       .map(k => s"order:$k")
-    s.read.format("graftkv").load(out)
+    s.read.format("graftkv").load(publishOrdersKv(s, d, "orders_kv_lookup"))
       .filter($"key".isin(wanted: _*))
       .orderBy($"key")
   }

@@ -7,28 +7,28 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.core.Tables
 import graft.functions.TextFunctions._
+import graft.pipelines.Populate
 import Catalog._
 
 /** Text-analysis surface over the `documents` corpus — SURVEY.md §2B rows
   * "Text analysis", plus the north-star language-ID / quality / token-count /
   * fingerprint operators.
   *
-  * The flagship `q_text_top_skills` reproduces the reference's populate-stage
-  * aggregation (`/root/reference/data_populator/populator.py:39-46`):
-  * lowercase → whitespace-split → dictionary membership → per-group counts →
-  * top-10 with deterministic `(count DESC, token ASC)` tie-break (declared
-  * divergence from Counter's first-seen tie order, SURVEY.md §7.3).
+  * The flagship `q_text_top_skills` is the reference's populate-stage
+  * ranking (`/root/reference/data_populator/populator.py:39-46`) run by
+  * [[graft.pipelines.Populate.rank]] over `documents`, one group per
+  * `source`: dictionary membership → per-group counts → top-10 by
+  * `(count DESC, token ASC)` (declared divergence from Counter's
+  * first-seen tie order, SURVEY.md §7.3). Tokens are
+  * [[graft.functions.TextFunctions.tokens]]' single-space split, the one
+  * the DuckDB oracle uses, not the pipeline's `\\s+` regex split (which
+  * would also compile its pattern for every row).
   *
   * Scale notes (100 TB design point):
   *  - explode(tokens) fans out ~100x then immediately partial-aggregates:
   *    the map-side combine collapses per-partition (group, token) pairs
   *    before the single shuffle, so shuffle volume is bounded by
   *    |groups| x |dictionary|, not by token count.
-  *  - The dictionary is a broadcast semi-join (a few hundred entries at
-  *    most — `skills.json` has 68), never a shuffled join.
-  *  - The top-10 window partitions by group; cardinality of each partition
-  *    is already <= |dictionary| after aggregation, so the window sort is
-  *    tiny regardless of corpus size.
   *  - Per-document features (quality, fingerprint, langid) are pure
   *    narrow projections — no shuffle at all until the final canonical
   *    ORDER BY (oracle-only; dropped in production).
@@ -38,19 +38,19 @@ object TextAnalysis extends QueryGroup {
   private def skillsDictSql: String =
     SkillsDict.map(s => s"'$s'").mkString("(", ", ", ")")
 
+  /** [[graft.pipelines.Populate.rank]] over `documents`, each `source`
+    * as one job: `(source, token, cnt, rnk)`. Shared by the flagship and
+    * the `q_serving_*` rows. */
+  private[queries] def rankedSources(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    Populate.rank(Tables.documents(s, d)
+      .select($"source", explode(tokens($"text")).as("token")), SkillsDict)
+  }
+
   /** Flagship: top-10 dictionary tokens per source (populator.py:39-46). */
   private def topSkills(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dict = broadcast(SkillsDict.toDF("skill"))
-    val counts = Tables.documents(s, d)
-      .select($"source", explode(tokens($"text")).as("token"))
-      .join(dict, $"token" === $"skill", "left_semi")
-      .groupBy($"source", $"token")
-      .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy($"source").orderBy($"cnt".desc, $"token")
-    counts
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= 10)
+    rankedSources(s, d)
       .select($"source", $"rnk", $"token", $"cnt")
       .orderBy($"source", $"rnk")
   }

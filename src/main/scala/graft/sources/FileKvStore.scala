@@ -2,15 +2,14 @@ package graft.sources
 
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, NoSuchFileException, Paths, StandardOpenOption}
 
 import graft.pipelines.Populate
-import graft.streaming.EventsStreaming
 
 /** Durable file-backed key-value store — the offline stand-in for the
   * reference's DynamoDB sink (`/root/reference/data_populator/populator.py:
-  * 47-58` writes; `rest_api/.../index.py:16-25` reads) behind the repo's
-  * existing sink traits, so populate → serve runs end-to-end against a
+  * 47-58` writes; `rest_api/.../index.py:16-25` reads) behind
+  * [[Populate.RowSink]], so populate → serve runs end-to-end against a
   * store that survives JVM restarts (no connector dependency).
   *
   * Layout: an append-only log directory. Each (deserialized) store
@@ -22,16 +21,16 @@ import graft.streaming.EventsStreaming
   *
   * Semantics and limits (deliberate, documented):
   *  - Idempotent upserts: replaying a micro-batch rewrites the same keys
-  *    with the same values, which the sink traits already require.
+  *    with the same values, which `RowSink` already requires.
   *  - Last-write-wins ordering is millisecond-granular ACROSS writer
   *    instances (the filename prefix); within one instance it is exact
   *    (line order). Concurrent same-key writers in the same millisecond
   *    tie-break arbitrarily — the streaming sink never does that (a key
   *    lives in exactly one aggregation partition per batch).
   *  - This is a smoke/test-scale store. At 100 TB serving scale the same
-  *    traits take a real connector; nothing upstream changes.
+  *    trait takes a real connector; nothing upstream changes.
   */
-final class FileKvStore(dir: String) extends EventsStreaming.UpsertStore {
+final class FileKvStore(dir: String) extends Serializable {
 
   /** Per-instance log file. `@transient lazy`: each task's deserialized
     * copy creates its own file on first write, on the executor. */
@@ -125,10 +124,11 @@ object FileKvStore {
       .filter(f => f.getName.startsWith("log-") && f.getName.endsWith(".tsv"))
       .sortBy(_.getName)
 
-  /** Replay all logs in creation order; last write per key wins. */
-  def read(dir: String): Map[String, String] = {
+  /** Replays `files` in order; last write per key wins. Throws
+    * `NoSuchFileException` when a file was deleted after it was listed. */
+  private def replay(files: Seq[File]): Map[String, String] = {
     val m = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    logFiles(dir).foreach { f =>
+    files.foreach { f =>
       Files.readAllLines(f.toPath).forEach { line =>
         val i = line.indexOf('\t')
         if (i > 0) m.put(dec(line.substring(0, i)), dec(line.substring(i + 1)))
@@ -137,14 +137,25 @@ object FileKvStore {
     m.toMap
   }
 
-  /** Rewrite the merged view as one log and drop the replayed files.
-    * Call only with no active writers (e.g. between streaming runs). */
+  /** Replay all logs in creation order; last write per key wins. When
+    * [[compact]] deletes a listed segment before this replay opens it, the
+    * replay starts over from a fresh listing: the merged segment is
+    * committed before any delete, so the new listing holds the same view. */
+  def read(dir: String): Map[String, String] =
+    try replay(logFiles(dir))
+    catch { case _: NoSuchFileException => read(dir) }
+
+  /** Rewrite the merged view as one segment (one [[SegmentWriter]]: one
+    * open, then an atomic rename) and drop the replayed files. Safe under
+    * concurrent [[read]]s; call only with no active writers (e.g. between
+    * streaming runs, or from the one writer thread). */
   def compact(dir: String): Unit = {
     val old = logFiles(dir)
     if (old.nonEmpty) {
-      val merged = read(dir)
-      val store = new FileKvStore(dir)
-      merged.foreach { case (k, v) => store.upsert(k, v) }
+      val seg = new SegmentWriter(dir)
+      try replay(old).foreach { case (k, v) => seg.append(k, v) }
+      catch { case e: Throwable => seg.abort(); throw e }
+      seg.commit()
       old.foreach(_.delete())
     }
   }

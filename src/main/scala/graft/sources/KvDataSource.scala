@@ -19,7 +19,7 @@ import graft.sources.FileKvStore
   * writes DynamoDB, `populator.py:47-58`; the API reads it back,
   * `index.py:16-25`): `spark.read.format("graftkv")` /
   * `df.write.format("graftkv").mode("append")` against the same durable
-  * log directory the sink traits write, instead of driver-side
+  * log directory `FileKvStore.rowSink` writes, instead of driver-side
   * `snapshot()` calls.
   *
   * Read path: TableProvider → ScanBuilder with FILTER PUSHDOWN — key

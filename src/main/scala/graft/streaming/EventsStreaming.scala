@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.pipelines.Populate
+
 /** Structured-Streaming surface over event streams — SURVEY.md §2B streaming
   * rows. The reference's "stream" is a daily-batch file cadence
   * (`/root/reference/data-cleaner/cleaner.py:142-143` date-stamped
@@ -398,36 +400,21 @@ object EventsStreaming {
 
   // ---- foreachBatch upsert sink ------------------------------------------
 
-  /** Key-value upsert store boundary (the DynamoDB-style sink of reference
-    * S15 without a connector dependency). Implementations must be
-    * idempotent on key. */
-  trait UpsertStore extends Serializable {
-    def upsert(key: String, value: String): Unit
-  }
-
-  /** foreachBatch sink: upserts each aggregated row by composite key.
-    * Complete-mode re-emission keeps the store converged. Pass
+  /** foreachBatch sink: publishes each batch of `agg` through
+    * [[graft.pipelines.Populate.writeTo]] into `sink`, one row per put. A
+    * composite store key is a column the caller builds (e.g. `concat_ws`).
+    * Complete-mode re-emission keeps the store converged, and `RowSink`
+    * puts are idempotent on key, so a replayed batch is harmless. Pass
     * `Trigger.AvailableNow()` for the reference's drain-the-drop-folder
     * batch cadence. */
-  def foreachBatchUpsert(agg: DataFrame, store: UpsertStore,
-      keyCols: Seq[String],
+  def foreachBatchUpsert(agg: DataFrame, sink: Populate.RowSink,
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val w = agg.writeStream
       .outputMode(OutputMode.Complete)
       .option("checkpointLocation", checkpoint)
     trigger.foreach(w.trigger)
-    w.foreachBatch { (batch: DataFrame, _: Long) =>
-        val cols = batch.columns
-        batch.foreachPartition {
-          (rows: Iterator[org.apache.spark.sql.Row]) =>
-            rows.foreach { r =>
-              val key = keyCols.map(c => r.get(cols.indexOf(c))).mkString("|")
-              store.upsert(key, cols.zipWithIndex
-                .map { case (c, i) => s"$c=${r.get(i)}" }.mkString(","))
-            }
-        }
-      }
+    w.foreachBatch((batch: DataFrame, _: Long) => Populate.writeTo(batch, sink))
       .start()
   }
 }

@@ -110,6 +110,16 @@ class CleanGoldenSpec extends SparkTestBase {
     (3 to 10).foreach(i => assert(row.getAs[String](s"top_skill_n_$i") == null))
   }
 
+  test("serving: Q2 lookup of a 2-skill job returns exactly ranks 1 and 2") {
+    // Null ranks are dropped, as the published KV row omits null fields.
+    val pub = Populate.run(clean, Seq("python", "spark"))
+    val ranks = Populate
+      .lookupSkills(pub, "b6d8eec2-da41-59fb-9226-721ead4fde6e")
+      .orderBy("rank").collect()
+      .map(r => r.getAs[Int]("rank") -> r.getAs[String]("skill")).toSeq
+    assert(ranks == Seq(1 -> "python", 2 -> "spark"))
+  }
+
   test("serving: Q2 lookup unpacks ranked skills") {
     val pub = Populate.run(clean, PipelineSmoke.Skills)
     val skills = Populate

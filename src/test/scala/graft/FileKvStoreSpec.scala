@@ -69,6 +69,42 @@ class FileKvStoreSpec extends SparkTestBase {
     assert(back("k1") == "old")
   }
 
+  test("readers racing republish + compact see every key, never an error") {
+    val dir = freshDir("race")
+    val keys = (0 until 200).map(i => s"k$i")
+    // One generation = 4 committed segments of 50 keys each.
+    def publish(gen: Int): Unit = keys.grouped(50).foreach { part =>
+      val seg = new FileKvStore.SegmentWriter(dir)
+      part.foreach(k => seg.append(k, s"g$gen"))
+      seg.commit()
+    }
+    publish(0)
+    @volatile var done = false
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val readers = (1 to 3).map { _ =>
+      new Thread(() =>
+        try {
+          while (!done) {
+            val got = FileKvStore.read(dir)
+            if (got.keySet != keys.toSet)
+              errors.add(new AssertionError(s"a read saw ${got.size} keys"))
+            reads.incrementAndGet()
+          }
+        } catch { case t: Throwable => errors.add(t) })
+    }
+    readers.foreach(_.start())
+    // The one writer: segment order is millisecond-granular, so each
+    // publish and compaction starts in a later millisecond.
+    try (1 to 60).foreach { g =>
+      Thread.sleep(2); publish(g)
+      Thread.sleep(2); FileKvStore.compact(dir)
+    } finally { done = true; readers.foreach(_.join()) }
+    assert(errors.isEmpty, errors.toString)
+    assert(reads.get > 60)
+    assert(FileKvStore.read(dir) == keys.map(_ -> "g60").toMap)
+  }
+
   test("rowSink adapter keys rows by column and serializes sorted k=v") {
     val dir = freshDir("rowsink")
     val sink = new FileKvStore(dir).rowSink("job_id")

@@ -7,6 +7,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.pipelines.{Clean, Populate}
 import graft.sources.{FileKvStore, SkillsHttpServer}
+import graft.streaming.EventsStreaming
 
 /** End-to-end contract of the HTTP serving shim
   * ([[graft.sources.SkillsHttpServer]]) — the process-level twin of the
@@ -118,6 +119,29 @@ class HttpServingSpec extends SparkTestBase {
       assert(lc == 200)
       assert(listBody.contains(
         """{"job_id": "j1", "job": "Data Engineer, London (contract)"}"""))
+    }
+  }
+
+  test("foreachBatch sink escapes ',' and '=': GET returns every field") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions.max
+    import spark.implicits._
+    val dir = freshDir("stream_escape")
+    val input = MemoryStream[(String, String)](spark)
+    val agg = input.toDF().toDF("job_id", "job")
+      .groupBy($"job_id").agg(max($"job").as("job"))
+    val q = EventsStreaming.foreachBatchUpsert(agg,
+      new FileKvStore(dir).rowSink("job_id"))(
+      s"target/tmp/graft_ckpt_http_${System.nanoTime()}")
+    try {
+      input.addData(("j1", "Data Engineer, London (a=b)"), ("j=2", "x,y=z"))
+      q.processAllAvailable()
+    } finally q.stop()
+    withServer(dir) { srv =>
+      assert(get(srv.port, "/skills/j1") == (200,
+        """{"data": {"job": "Data Engineer, London (a=b)", "job_id": "j1"}}"""))
+      assert(get(srv.port, "/skills/j%3D2") == (200,
+        """{"data": {"job": "x,y=z", "job_id": "j=2"}}"""))
     }
   }
 

@@ -349,20 +349,19 @@ class StreamingSpec extends SparkTestBase {
     // within the local-mode JVM.
     val store = StreamingSpec.Store
     store.clear()
-    val sink = new EventsStreaming.UpsertStore {
-      def upsert(key: String, value: String): Unit =
-        StreamingSpec.Store.put(key, value)
+    val sink = new graft.pipelines.Populate.RowSink {
+      def put(row: Map[String, String]): Unit =
+        StreamingSpec.Store.put(row("event_type"), row("n"))
     }
     val ckpt = "target/tmp/graft_ckpt_" + System.nanoTime()
-    val q = EventsStreaming.foreachBatchUpsert(agg, sink,
-      Seq("event_type"))(ckpt)
+    val q = EventsStreaming.foreachBatchUpsert(agg, sink)(ckpt)
     try {
       input.addData(ev(1, ts(0), typ = "click"), ev(2, ts(1), typ = "view"))
       q.processAllAvailable()
       input.addData(ev(3, ts(2), typ = "click"))
       q.processAllAvailable()
-      assert(store.get("click").contains("n=2"))
-      assert(store.get("view").contains("n=1"))
+      assert(store.get("click") == "2")
+      assert(store.get("view") == "1")
     } finally q.stop()
   }
 
