@@ -1,68 +1,50 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, xxhash64}
 
 /** Benchmark main: times every catalog query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line for the driver (BENCH_r{N}.json).
   *
-  * Methodology (fixes the round-2 verdict findings):
-  *  - Full evaluation: each query is consumed by `sum(xxhash64(*))` over
-  *    ALL output columns, so Catalyst cannot prune the projections /
+  * Environment: SPARK_GRAFT_SF_DIR (data directory, default the sf0.1 set),
+  * SPARK_GRAFT_CPUS (local[N] and shuffle partitions, default 32),
+  * SPARK_GRAFT_BENCH_ONLY (comma-separated query names: a filtered run),
+  * SPARK_GRAFT_BENCH_RUNS (timed runs per query, default 3) and
+  * SPARK_GRAFT_BENCH_DETAIL_OUT (path for the full-precision detail
+  * record).
+  *
+  * Methodology:
+  *  - Full evaluation: each query is consumed by `bit_xor(xxhash64(*))`
+  *    over ALL output columns, so Catalyst cannot prune the projections /
   *    window expressions being measured (a bare `.count()` lets column
   *    pruning delete the work). The trailing canonicalization ORDER BY is
   *    still elided under the agg — intentional: production plans don't
   *    carry an oracle-ordering sort either.
-  *  - One untimed warmup pass first (JVM/JIT + parquet footer caches), so
-  *    session warmup isn't attributed to whichever query runs first.
-  *  - Median of SPARK_GRAFT_BENCH_RUNS (default 3) timed runs per query:
-  *    single runs of sub-second queries jitter up to ±2x on a shared box
-  *    (round-5 verdict), which masks real regressions; the median is
-  *    stable to <20% on unchanged code.
-  *  - SPARK_GRAFT_BENCH_SWEEPS (default 1) repeats the whole timed pass
-  *    and keeps the per-query MIN of the sweep medians. The committed
-  *    BENCH_DETAIL.json is produced this way (r11 advisor: the artifact
-  *    must carry its own selection provenance, not a hand-assembled min
-  *    masquerading as a single run) — the detail JSON records
-  *    `"selection"` and `"sweeps"` explicitly.
-  *  - The graph family runs in a FRESH CHILD JVM (one subprocess for the
-  *    family, own SparkSession, own warmup): quiesce-between-queries was
-  *    not enough to make its in-sweep numbers match isolated medians
-  *    (r11 verdict: q_graph_pagerank 11.45 s in the driver sweep vs
-  *    3.79 s isolated on identical code — JVM-wide residue: JIT/codegen
-  *    cache churn and heap fragmentation from the preceding ~200
-  *    queries, not block-manager state, which quiesce already clears).
-  *    A pristine JVM per family IS the isolated condition, so a real
-  *    regression in the engine's most expensive family is visible in
-  *    the driver's own sweep instead of being buried in noise.
+  *  - A filtered run warms the session with 12 floor-shaped consumes,
+  *    runs each of its queries twice untimed, then reports per query the
+  *    median of SPARK_GRAFT_BENCH_RUNS timed runs, each started on a
+  *    quiesced session. Single runs of sub-second queries jitter up to ±2x
+  *    on a shared box; the median of 3 is stable to <20% on unchanged code.
+  *  - A full run (SPARK_GRAFT_BENCH_ONLY unset) times no query itself: it
+  *    hands the sorted catalog to fresh child JVMs, [[ChunkSize]] queries
+  *    each, and every child is a filtered run of this main. Timed in one
+  *    JVM, residue of the preceding ~200 queries (JIT/codegen churn, heap
+  *    fragmentation) inflated multi-second queries up to 3x over their
+  *    isolated medians (q_assoc_rules 7.79 s in-sweep vs 2.82 s isolated
+  *    on identical code). The parent brackets the chunks with a drift
+  *    sentinel and records each child's own floor probe per chunk.
   *  - A failing query is reported in an "errors" map, not as a timing.
   */
 object Bench {
 
-  /** Queries timed in a fresh child JVM during full sweeps (see above).
-    * The four iterative graph queries: heaviest in the catalog, most
-    * sensitive to JVM-wide residue, and the exact family whose in-sweep
-    * inflation the r10/r11 verdicts flagged. */
-  /** Queries a full sweep times in fresh child JVMs. The graph family
-    * moved here in r12 (JVM-wide residue inflated them up to 3× on a
-    * loaded box); r15 extends the list with the mid-tier queries the
-    * r15 sweep-vs-isolated artifact pair measured at ≥1.5× in-sweep
-    * inflation on identical code (q_assoc_rules 7.79 s in-sweep vs
-    * 2.82 s isolated was the extreme) — the same JIT/codegen-churn +
-    * heap-fragmentation effect, now measurable once per-query work
-    * reaches seconds. Timed in chunks so residue cannot rebuild WITHIN
-    * the child either. The list is selection methodology, not engine:
-    * BASELINE.md's comparability notes cover the r15 boundary. */
-  private val IsolatedFamily = Seq(
-    "q_graph_pagerank", "q_graph_linkpred",
-    "q_graph_triangles", "q_graph_reachability",
-    "q_assoc_rules", "q_ann_recall", "q_ann_ivf",
-    "q_text_containment", "q_agg_corr", "q_agg_median_weighted",
-    "q_dedup_cluster", "q_table_checksum", "q_approx_stats")
+  /** Queries per child JVM in a full run: the chunk size the committed
+    * BENCH_DETAIL_ISOLATED.json was swept at. */
+  val ChunkSize = 10
 
-  /** Chunk size for the isolated family's child JVMs (the isolate-all
-    * mode takes its own size from SPARK_GRAFT_BENCH_ISOLATE_ALL). */
-  private val IsolatedChunk = 5
+  /** Mid-weight query the drift sentinel times at sweep start and end. */
+  private val SentinelAnchor = "q_agg_corr"
 
   /** Force end-to-end evaluation of every output column. bit_xor (not sum)
     * folds the row hashes: hash sums overflow longs within a few thousand
@@ -72,229 +54,226 @@ object Bench {
     df.select(h.as("h")).agg(expr("bit_xor(h)")).collect()
   }
 
+  private def secs(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
   /** Release every block the previous query left behind, OUTSIDE any timed
     * window. The iterative queries (graph, cluster, keep-best) leave eager
     * localCheckpoint blocks; their broadcasts and shuffle files are freed
     * by ContextCleaner only after a JVM GC proves the references dead, and
-    * the cleaner works asynchronously — so a bare System.gc() between
-    * queries (the pre-r11 hygiene) still let state pile up across a
-    * 200-query sweep, inflating later checkpoint-heavy queries up to 3x
-    * vs their isolated medians (r10 verdict: q_graph_pagerank 11.0 s
-    * in-sweep vs 3.40 s isolated on identical code). Blocking unpersist +
-    * two GC passes with a short pause lets the cleaner's reference queue
-    * drain before the next timer starts. */
+    * the cleaner works asynchronously — with a bare System.gc() between
+    * queries, state piled up across a sweep and inflated checkpoint-heavy
+    * queries up to 3x (q_graph_pagerank 11.0 s in-sweep vs 3.40 s
+    * isolated on identical code). Blocking unpersist + two GC passes with
+    * a short pause let the cleaner's reference queue drain before the next
+    * timer starts. */
   private def quiesce(spark: SparkSession): Unit = {
     val sc = spark.sparkContext
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    // Driver-created broadcasts (the partitioned triangle blooms) are
-    // only reclaimed once GC proves the stub dead; destroy the tracked
-    // ones eagerly so repeated sweeps can't accumulate executor-resident
-    // copies (r15 advisor).
+    // Driver-created broadcasts (the partitioned triangle blooms) are only
+    // reclaimed once GC proves the stub dead; destroy the tracked ones
+    // eagerly so repeated runs can't accumulate executor-resident copies.
     graft.core.Broadcasts.drain()
     System.gc(); Thread.sleep(120)
     System.gc(); Thread.sleep(60)
   }
 
-  /** Run the isolated family in a fresh child JVM (same main, BENCH_ONLY
-    * filtered, child-flagged) and parse its per-query medians from the
-    * summary JSON line. Returns None — loudly — if the subprocess can't
-    * be built, dies, times out, or reports a different query set; the
-    * caller falls back to in-process timing so the sweep never loses the
-    * family. The classpath is derived from live code sources (this class
-    * + Spark's), NOT java.class.path, which under an sbt in-process run
-    * is just the sbt launcher. */
-  /** Per-chunk drift records accumulated by the child-JVM dispatchers:
-    * (sweep index, chunk queries, the chunk child's own end-of-run floor
-    * probe). The r17 parent-level sentinel caught 25% drift across a
-    * whole isolated sweep but couldn't say WHICH chunks ran hot —
-    * exactly the granularity a per-query cross-round comparison needs
-    * (the r17 q_search_rrf 2.06 s row was such a casualty: re-measured
-    * 1.10 s in the identical chunk regime on a calmer box). Each child
-    * already times the shared floor probe at the end of its run; record
-    * it per chunk in the detail artifact so every row can be normalized
-    * against ITS OWN chunk's floor (BASELINE.md extends the
-    * normalization rule). Records carry the FULL member list and the
-    * sweep index explicitly (r18 review: the family path chunks a
-    * hand-curated list, not sorted-catalog runs, and multi-sweep runs
-    * re-dispatch every chunk — a first-query-keyed object would
-    * misattribute both). */
-  private val chunkFloors =
-    scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[String], Double)]
+  /** The one timing loop: `runs` timed consumes of a query, each on a
+    * quiesced session. Returns the median of the successful runs (middle
+    * element, ties low; None when every run failed) and the first
+    * failure's message, stripped of quotes, backslashes and line breaks
+    * so it embeds in JSON as is. */
+  private def timeQuery(spark: SparkSession, sfDir: String,
+                        fn: (SparkSession, String) => DataFrame,
+                        runs: Int): (Option[Double], Option[String]) = {
+    var err = Option.empty[String]
+    val times = (1 to runs).flatMap { _ =>
+      quiesce(spark)
+      try Some(secs(consume(fn(spark, sfDir))))
+      catch {
+        case e: Throwable =>
+          if (err.isEmpty) err = Some(Option(e.getMessage)
+            .getOrElse(e.getClass.getName)
+            .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120))
+          None
+      }
+    }
+    (times.sorted.lift((times.size - 1) / 2), err)
+  }
 
-  /** Sweep index for chunkFloors provenance — set by the sweep loop. */
-  private var currentSweep = 1
+  /** What a child JVM reports for its chunk: per-query medians, per-query
+    * errors and the child's own end-of-run floor probe (-1.0 if absent). */
+  final case class ChildResult(times: Map[String, Double],
+                               errors: Map[String, String],
+                               floorSec: Double)
 
-  private def childBench(family: Seq[String], nRuns: Int, sfDir: String,
-                         cpus: String): Option[Map[String, Double]] = {
-    try {
-      // Prefer the forked JVM's own resolved classpath: it is, by
-      // construction, sufficient (this process is running on it), and
-      // it survives sbt's bg-jobs snapshotting — `sbt runMain` may copy
-      // every classpath entry into per-jar hash directories under
-      // target/bg-jobs/, in which case deriving a jar DIRECTORY from
-      // one class's code source points at a folder holding a single
-      // jar: the child then dies at bootstrap with
-      // NoClassDefFoundError: scala/collection/immutable/Seq (r15: all
-      // three isolated chunks of a canonical sweep fell back
-      // in-process this way, silently). The code-source scheme remains
-      // the fallback for in-process launches whose java.class.path is
-      // just the sbt launcher.
-      // Probe each candidate FUNCTIONALLY (r15 advisor: the former
-      // `jcp.contains("spark-sql")` name match would reject a classpath
-      // carrying Spark via an unexpanded wildcard or a shaded/assembly
-      // jar, silently dropping to the code-source fallback r15 diagnosed
-      // as broken under sbt bg-jobs): a candidate is usable iff a child
-      // bootstrap's three load-bearing classes — the Scala library,
-      // Spark SQL, and this Bench — all resolve from its entries.
-      def resolvesChildBootstrap(cp: String): Boolean = try {
-        val sep = java.io.File.pathSeparator
-        val urls = cp.split(sep).filter(_.nonEmpty).flatMap { e =>
+  private val Num = """([0-9]+(?:\.[0-9]+)?(?:[eE]-?[0-9]+)?)"""
+
+  /** Parse a child's detail line for `chunk`. Every member must have a
+    * timing or an error, else None: the caller then re-times the chunk
+    * in-process. Error messages carry no quote (see [[timeQuery]]), so a
+    * `"q_…":"…"` pair can only be an errors entry and a `"q_…":<n>` pair
+    * only a timing. */
+  def parseChild(line: String, chunk: Seq[String]): Option[ChildResult] = {
+    val times = raw""""(q_\w+)":$Num""".r.findAllMatchIn(line)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    val errors = raw""""(q_\w+)":"([^"]*)"""".r.findAllMatchIn(line)
+      .map(m => m.group(1) -> m.group(2)).toMap
+    if (!chunk.forall(q => times.contains(q) || errors.contains(q))) None
+    else {
+      // The first floor_sec is the child's own; its chunk_floors is empty.
+      val floor = raw""""floor_sec":$Num""".r.findFirstMatchIn(line)
+        .map(_.group(1).toDouble).getOrElse(-1.0)
+      Some(ChildResult(times, errors, floor))
+    }
+  }
+
+  /** Locale-pinned 3-decimal formatting: the f"" interpolator uses the
+    * JVM default locale, and a comma-decimal locale would turn the summary
+    * line into invalid JSON that its reader silently fails to parse. */
+  private def f3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def errorsJson(errors: Seq[(String, String)]): String =
+    errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+      .mkString("{", ",", "}")
+
+  /** The one-line JSON summary on stdout. Its reader keeps only a bounded
+    * tail of this process's output (~2.5 kB lines came back unparsed), so the
+    * queries map is budgeted to 1400 bytes: slowest first, 3-decimal
+    * seconds; the rest are counted in "omitted" and present in full in
+    * the detail record. */
+  def summaryLine(results: Seq[(String, Double)],
+                  errors: Seq[(String, String)],
+                  nRuns: Int, sfDir: String): String = {
+    val budget = 1400
+    val kept = mutable.ArrayBuffer.empty[String]
+    var used = 0
+    results.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + f3(v) }
+      .foreach { e =>
+        if (used + e.length + 1 <= budget) { kept += e; used += e.length + 1 }
+      }
+    val total = results.map(_._2).sum
+    s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"queries":${kept.mkString("{", ",", "}")},"omitted":${results.size - kept.size},"detail":"BENCH_DETAIL.json","errors":${errorsJson(errors)},"runs":$nRuns,"sf":"$sfDir"}"""
+  }
+
+  /** A classpath a child JVM can boot from. The forked JVM's own
+    * java.class.path comes first: it is sufficient by construction, and
+    * it survives `sbt runMain` copying every entry into per-jar hash
+    * directories under target/bg-jobs/, where a jar DIRECTORY derived
+    * from one class's code source holds a single jar and the child dies
+    * with NoClassDefFoundError. The code-source scheme is the fallback
+    * for in-process launches whose java.class.path is the sbt launcher.
+    * Each candidate is probed functionally rather than by name (a name
+    * match rejects Spark behind a wildcard or in an assembly jar): it is
+    * usable iff the Scala library, Spark SQL and this Bench all resolve
+    * from its entries. */
+  private def childClasspath(): Option[String] = {
+    def resolvesChildBootstrap(cp: String): Boolean = try {
+      val urls = cp.split(java.io.File.pathSeparator).filter(_.nonEmpty)
+        .flatMap { e =>
           if (e.endsWith("*")) {
             val dir = new java.io.File(e.dropRight(1))
             Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
               .filter(_.getName.endsWith(".jar")).map(_.toURI.toURL)
           } else Array(new java.io.File(e).toURI.toURL)
         }
-        val cl = new java.net.URLClassLoader(urls, null)
-        try {
-          Seq("scala.collection.immutable.Seq",
-            "org.apache.spark.sql.SparkSession",
-            "graft.Bench").foreach(cl.loadClass)
-          true
-        } finally cl.close()
-      } catch { case scala.util.control.NonFatal(_) => false }
-      val jcp = System.getProperty("java.class.path")
-      val codeSourceCp = try {
-        val classesDir = new java.io.File(
-          Bench.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
-        val sparkJarDir = new java.io.File(
-          classOf[SparkSession].getProtectionDomain
-            .getCodeSource.getLocation.toURI).getParentFile
-        Some(classesDir.getPath + java.io.File.pathSeparator +
-          sparkJarDir.getPath + java.io.File.separator + "*")
-      } catch { case scala.util.control.NonFatal(_) => None }
-      val cp = (Option(jcp) ++ codeSourceCp)
-        .find(resolvesChildBootstrap)
-        .getOrElse {
-          System.err.println("[bench] no candidate classpath resolves the " +
-            "child bootstrap classes; falling back in-process")
-          return None
-        }
-      val javaExe = new java.io.File(
-        new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
-      // Inherit the parent JVM's flags (heap, code cache, add-opens from
-      // build.sbt's forked javaOptions), minus agents/log decorations,
-      // and ALWAYS append Spark's JDK-17 module opens — a plain
-      // `java -cp` parent carries none, and without java.nio open a
-      // disk-spilling child dies in Kryo on HeapByteBuffer (seen at the
-      // ×100 scale probe; sub-spill workloads never hit it). Duplicate
-      // --add-opens flags are harmless.
-      import scala.jdk.CollectionConverters._
-      val inherited = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments.asScala
-        .filterNot(a => a.startsWith("-agentlib") ||
-          a.startsWith("-javaagent") || a.startsWith("-Xlog"))
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-      val cmd = (Seq(javaExe) ++ inherited ++ addOpens ++
-        Seq("-cp", cp, "graft.Bench")).asJava
-      val pb = new ProcessBuilder(cmd)
-      val env = pb.environment()
-      env.put("SPARK_GRAFT_BENCH_ONLY", family.mkString(","))
-      env.put("SPARK_GRAFT_BENCH_CHILD", "1")
-      env.put("SPARK_GRAFT_BENCH_RUNS", nRuns.toString)
-      env.put("SPARK_GRAFT_SF_DIR", sfDir)
-      env.put("SPARK_GRAFT_CPUS", cpus)
-      // The child must NOT inherit the parent's sweep/detail settings:
-      // an inherited SWEEPS=N would nest N child sweeps inside each of
-      // the parent's N (selection becomes min of N² medians while the
-      // detail JSON claims N), and an inherited DETAIL_OUT would let the
-      // child transiently overwrite the parent's detail file with a
-      // 4-query record. The child runs exactly one sweep; the parent's
-      // sweep loop provides the selection pressure.
-      env.put("SPARK_GRAFT_BENCH_SWEEPS", "1")
-      // Timings are read from the child's FULL-PRECISION detail file,
-      // not its stdout summary line: the stdout line budgets itself to
-      // ~1.4 kB (slowest-first, rest "omitted"), so a chunk of more
-      // than ~45 queries would lose entries there — which this caller
-      // would misread as "child returned no timing" and silently fall
-      // back to in-process for the whole chunk, defeating isolation
-      // for large SPARK_GRAFT_BENCH_ISOLATE_ALL chunk sizes.
-      val detailFile =
-        java.io.File.createTempFile("graft-bench-child", ".detail.json")
-      detailFile.deleteOnExit()
-      env.put("SPARK_GRAFT_BENCH_DETAIL_OUT", detailFile.getPath)
-      // Child stderr (Spark WARN chatter) flows to our stderr — never
-      // buffered in a pipe the parent forgets to drain (deadlock).
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      // Child stdout goes to a temp FILE, not a pipe: the first blocking
-      // call after start() must be the bounded waitFor — a pipe read
-      // (transferTo) only returns at stdout EOF, so a child that hangs
-      // without exiting would hang the whole bench forever instead of
-      // being killed at the 30-minute budget.
-      val outFile = java.io.File.createTempFile("graft-bench-child", ".out")
-      outFile.deleteOnExit()
-      pb.redirectOutput(outFile)
-      val p = pb.start()
-      val done = p.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)
-      if (!done) { p.destroyForcibly(); p.waitFor() }
-      val out = new String(
-        java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8")
-      outFile.delete()
-      if (!done || p.exitValue() != 0) {
+      val cl = new java.net.URLClassLoader(urls, null)
+      try {
+        Seq("scala.collection.immutable.Seq",
+          "org.apache.spark.sql.SparkSession",
+          "graft.Bench").foreach(cl.loadClass)
+        true
+      } finally cl.close()
+    } catch { case scala.util.control.NonFatal(_) => false }
+    val codeSourceCp = try {
+      val classesDir = new java.io.File(
+        Bench.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+      val sparkJarDir = new java.io.File(
+        classOf[SparkSession].getProtectionDomain
+          .getCodeSource.getLocation.toURI).getParentFile
+      Some(classesDir.getPath + java.io.File.pathSeparator +
+        sparkJarDir.getPath + java.io.File.separator + "*")
+    } catch { case scala.util.control.NonFatal(_) => None }
+    (Option(System.getProperty("java.class.path")) ++ codeSourceCp)
+      .find(resolvesChildBootstrap)
+  }
+
+  /** Run `chunk` as a filtered run of this main in a fresh child JVM and
+    * read its detail record. None — loudly — if the child cannot start,
+    * dies, times out, or leaves a member with neither a timing nor an
+    * error; the caller then times the chunk in-process. */
+  private def childBench(chunk: Seq[String], nRuns: Int, sfDir: String,
+                         cpus: String): Option[ChildResult] = {
+    def failed(why: String): Option[ChildResult] = {
+      System.err.println(s"[bench] child JVM for ${chunk.head}.. $why; " +
+        "falling back in-process")
+      None
+    }
+    try childClasspath() match {
+      case None => failed("has no classpath that resolves its bootstrap")
+      case Some(cp) =>
+        val javaExe = new java.io.File(
+          new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
+        // Inherit the parent JVM's flags (heap, code cache, add-opens from
+        // build.sbt's forked javaOptions), minus agents/log decorations,
+        // and ALWAYS append Spark's JDK-17 module opens — a plain
+        // `java -cp` parent carries none, and without java.nio open a
+        // disk-spilling child dies in Kryo on HeapByteBuffer. Duplicate
+        // --add-opens flags are harmless.
+        import scala.jdk.CollectionConverters._
+        val inherited = java.lang.management.ManagementFactory
+          .getRuntimeMXBean.getInputArguments.asScala
+          .filterNot(a => a.startsWith("-agentlib") ||
+            a.startsWith("-javaagent") || a.startsWith("-Xlog"))
+        val addOpens = Seq(
+          "java.base/java.lang", "java.base/java.lang.invoke",
+          "java.base/java.lang.reflect", "java.base/java.io",
+          "java.base/java.net", "java.base/java.nio",
+          "java.base/java.util", "java.base/java.util.concurrent",
+          "java.base/java.util.concurrent.atomic",
+          "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+          "java.base/sun.security.action", "java.base/sun.util.calendar")
+          .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+        val pb = new ProcessBuilder((Seq(javaExe) ++ inherited ++ addOpens ++
+          Seq("-cp", cp, "graft.Bench")).asJava)
+        // Results come back through the child's full-precision detail
+        // file, which also carries its floor probe; it overrides any
+        // inherited SPARK_GRAFT_BENCH_DETAIL_OUT.
+        val detailFile =
+          java.io.File.createTempFile("graft-bench-child", ".detail.json")
+        detailFile.deleteOnExit()
+        val env = pb.environment()
+        env.put("SPARK_GRAFT_BENCH_ONLY", chunk.mkString(","))
+        env.put("SPARK_GRAFT_BENCH_RUNS", nRuns.toString)
+        env.put("SPARK_GRAFT_SF_DIR", sfDir)
+        env.put("SPARK_GRAFT_CPUS", cpus)
+        env.put("SPARK_GRAFT_BENCH_DETAIL_OUT", detailFile.getPath)
+        // No pipes: Spark's stderr chatter flows through, and the summary
+        // line is discarded, so the first blocking call after start() is
+        // the bounded waitFor and a hung child is killed at 30 minutes.
+        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+        pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
+        val p = pb.start()
+        val done = p.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)
+        if (!done) { p.destroyForcibly(); p.waitFor() }
+        val line = new String(
+          java.nio.file.Files.readAllBytes(detailFile.toPath), "UTF-8")
         detailFile.delete()
-        System.err.println(s"[bench] child JVM failed (timeout=${!done}); " +
-          "falling back to in-process timing for the graph family")
-        return None
-      }
-      // Prefer the detail file (complete + full precision); the stdout
-      // summary line is only the fallback if the write failed.
-      val detail =
-        if (detailFile.length() > 0)
-          new String(
-            java.nio.file.Files.readAllBytes(detailFile.toPath), "UTF-8")
-        else ""
-      detailFile.delete()
-      val line =
-        if (detail.contains("\"metric\":\"total\"")) detail
-        else out.linesIterator.find(_.contains("\"metric\":\"total\""))
-          .getOrElse(return None)
-      val qt = """"(q_\w+)":([0-9]+(?:\.[0-9]+)?(?:[eE]-?[0-9]+)?)""".r
-      val parsed = qt.findAllMatchIn(line)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      val missing = family.filterNot(parsed.contains)
-      if (missing.nonEmpty) {
-        System.err.println(s"[bench] child JVM returned no timing for " +
-          s"${missing.mkString(", ")}; falling back in-process")
-        None
-      } else {
-        // The chunk's own floor reading (end of the child's run) — the
-        // per-chunk half of the drift sentinel. -1.0 marks unparsable.
-        val floorRe = """"floor_sec":([0-9]+(?:\.[0-9]+)?(?:[eE]-?[0-9]+)?)""".r
-        val chunkFloor =
-          floorRe.findFirstMatchIn(line).map(_.group(1).toDouble).getOrElse(-1.0)
-        synchronized { chunkFloors += ((currentSweep, family, chunkFloor)) }
-        Some(parsed.view.filterKeys(family.contains).toMap)
-      }
+        if (!done || p.exitValue() != 0) failed(s"failed (timeout=${!done})")
+        else parseChild(line, chunk).orElse(failed(
+          "reported neither a timing nor an error for some query"))
     } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] child JVM spawn failed ($e); " +
-          "falling back to in-process timing for the graph family")
-        None
+      case scala.util.control.NonFatal(e) => failed(s"could not run ($e)")
     }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val isChild = sys.env.get("SPARK_GRAFT_BENCH_CHILD").contains("1")
     val spark = SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .master(s"local[$cpus]")
@@ -313,325 +292,117 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Optional checkpoint-mode override (local|disk|reliable) so the
-    // fault-tolerant modes' overhead can be MEASURED with the identical
-    // harness (SCALE_PROBE.md local-vs-disk rows) — a runtime session
-    // conf, so an env var is the only way into a fresh bench JVM.
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_MODE")
-      .foreach(m => spark.conf.set(graft.core.Checkpoints.ModeKey, m))
+    val catalog = SparkEntry.queries
 
-    // Optional single-query iteration mode: SPARK_GRAFT_BENCH_ONLY is a
-    // comma-separated name list. Unknown names are a hard error (the
-    // same trap as Verify's filtered mode: a typo silently timing
-    // nothing reads as a pass). Filtered runs NEVER write
-    // BENCH_DETAIL.json — that committed artifact must stay a full
-    // sf0.1 catalog sweep.
+    // Filtered mode: SPARK_GRAFT_BENCH_ONLY is a comma-separated name
+    // list. Unknown names are a hard error (the same trap as Verify's
+    // filtered mode: a typo silently timing nothing reads as a pass).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
+      val unknown = names -- catalog.keySet
       if (unknown.nonEmpty) {
         System.err.println(s"[bench] unknown queries: ${unknown.mkString(", ")}")
         sys.exit(2)
       }
     }
-    // Whole-catalog child-JVM isolation: SPARK_GRAFT_BENCH_ISOLATE_ALL=N
-    // times EVERY query in fresh child JVMs, N catalog queries per child
-    // (each child does its own warmup + median). Motivation (r14 ×100
-    // sweep): once per-query work reaches seconds, in-sweep JVM residue
-    // (JIT/codegen churn + heap fragmentation from the ~200 preceding
-    // queries) inflates mid-tier queries 5–8× over their isolated
-    // medians — the same effect that moved the graph family to a child
-    // JVM in r12, now measurable across the catalog at ×100-scale
-    // corpora. Off by default: the canonical sf0.1 sweep stays the
-    // committed methodology; scale probes opt in.
-    val isolateChunk =
-      if (only.isEmpty && !isChild)
-        sys.env.get("SPARK_GRAFT_BENCH_ISOLATE_ALL")
-          .map(_.trim.toInt).filter(_ > 0)
-      else None
-    // Full parent sweeps hand the graph family to a child JVM; filtered
-    // runs (including the child itself) time everything in-process.
-    val isolateFamily = only.isEmpty && !isChild && isolateChunk.isEmpty
-    val isolated =
-      if (isolateFamily) IsolatedFamily.filter(SparkEntry.queries.contains)
-      else Seq.empty
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .filterNot { case (n, _) => isolated.contains(n) }
-    // In isolate-all mode nothing is timed in this JVM (children warm up
-    // themselves); the parent is only the orchestrator.
-    val inProcess = if (isolateChunk.isDefined) Seq.empty else queries
+    val names = catalog.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+    val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val errors = mutable.LinkedHashMap.empty[String, String]
 
-    // Cold-JVM session warmup (child JVMs and isolate-all parents): the
-    // shared timing path — scheduler, collect, xxhash64/bit_xor codegen,
-    // shuffle client — JITs over the first dozen queries of a long sweep,
-    // but a child that times only a 5-10 query chunk never gets there: the
-    // r15 isolated artifact's observed floor ran 0.198 s vs the warm
-    // in-sweep 0.09 s, putting one-warmup child medians ABOVE warm
-    // in-sweep medians for floor-dominated queries (BASELINE.md r15 note;
-    // r15 verdict item #5). A dozen floor-shaped consumes JIT that common
-    // machinery before any query-specific warmup runs.
-    if (isChild || isolateChunk.isDefined)
+    /** A filtered run's timing: cold-JVM warm-up, then [[timeQuery]] per
+      * query. A dozen floor-shaped consumes JIT the shared timing path
+      * (scheduler, collect, xxhash64/bit_xor codegen, shuffle client),
+      * which otherwise put a 10-query child's floor at 0.198 s vs 0.09 s
+      * warm. Each query then runs twice untimed (failures surface in the
+      * timed runs): the first run pays the query's one-off Janino
+      * compiles, which would otherwise land in its first timed run. */
+    def timeInProcess(qs: Seq[String]): Seq[(String, Double)] = {
       (1 to 12).foreach(_ => consume(spark.range(1).toDF("id")))
-
-    // Untimed warmup: run everything once (ignore failures here; they are
-    // captured in the timed pass). Quiesce per query so warmup leaves the
-    // block manager empty rather than carrying 200 queries of residue
-    // into the first timed window. Child JVMs warm each query TWICE: the
-    // first execution also pays one-off Janino compiles of the query's
-    // own codegen units, which a 200-query in-sweep run amortizes across
-    // the whole pass but a short-chunk child attributes to its first
-    // timed run's neighborhood.
-    val warmupRounds = if (isChild) 2 else 1
-    inProcess.foreach { case (_, fn) =>
-      (1 to warmupRounds).foreach { _ =>
-        try consume(fn(spark, sfDir)) catch { case _: Throwable => () }
-        quiesce(spark)
+      qs.foreach { n =>
+        (1 to 2).foreach { _ =>
+          try consume(catalog(n)(spark, sfDir)) catch { case _: Throwable => () }
+          quiesce(spark)
+        }
+      }
+      qs.flatMap { n =>
+        val (median, err) = timeQuery(spark, sfDir, catalog(n), nRuns)
+        err.foreach(errors.getOrElseUpdate(n, _))
+        median.map(n -> _)
       }
     }
 
-    val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val nSweeps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_SWEEPS", "1").toInt)
-
-    var errors = Vector.empty[(String, String)]
-
-    // ---- drift sentinel (r16 verdict item #4) ---------------------------
-    // The box drifted 20–30% intra-day in r15 AND r16, and each time a
-    // per-query comparison against an earlier artifact cost a round-trip
-    // of forensics (q_dedup_cluster, triangles). Bracket every sweep with
-    // a fixed pair — the no-op floor probe and one mid-weight anchor
-    // query — timed at sweep START and END, recorded in the detail
-    // artifact, so any future comparison can normalize mechanically
-    // (BASELINE.md documents the rule: compare (q − floor)/(anchor −
-    // floor) across artifacts, using each artifact's own bracket means).
-    // Child JVMs skip it: the parent's bracket spans their whole run.
-    val SentinelAnchor = "q_agg_corr"
-    // ONE floor estimator for every reading (start sentinel, end
-    // sentinel, the BENCH_PROXY floor_sec): 8 untimed consumes then a
-    // median-of-7 — two different estimators of the same quantity would
-    // bias exactly the start/end drift signal the sentinel measures
-    // (r17 review). Eight warm consumes, not two: a cold isolate-all
-    // parent's timing path needs several executions before JIT stops
-    // dominating (r15 verdict item #5).
+    // ONE floor estimator for every reading (start sentinel, end sentinel,
+    // the detail's floor_sec, which tools/bench_proxy.py subtracts per
+    // query): 8 untimed consumes, then the median of 7 timed ones of a
+    // 1-row range through the exact timing path every query takes. Two
+    // estimators of one quantity would bias the start/end drift signal.
     def floorProbe(): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        consume(spark.range(1).toDF("id"))
-        (System.nanoTime() - t0) / 1e9
-      }
+      val once = () => secs(consume(spark.range(1).toDF("id")))
       (1 to 8).foreach(_ => once())
       (1 to 7).map(_ => once()).sorted.apply(3)
     }
+    // Drift sentinel: the box drifted 20–30% intra-day, so a full run
+    // brackets its chunks with the floor probe and one mid-weight anchor
+    // query, timed at the start and the end. BASELINE.md's rule compares
+    // (q − floor)/(anchor − floor) across artifacts, each with its own
+    // bracket means.
     def sentinelAnchor(): Double =
       try {
-        val fn = SparkEntry.queries(SentinelAnchor)
-        consume(fn(spark, sfDir)); quiesce(spark) // warm
-        val ts = (1 to 3).map { _ =>
-          quiesce(spark)
-          val t0 = System.nanoTime()
-          consume(fn(spark, sfDir))
-          (System.nanoTime() - t0) / 1e9
-        }
+        val fn = catalog(SentinelAnchor)
+        consume(fn(spark, sfDir)) // warm
+        val (median, err) = timeQuery(spark, sfDir, fn, 3)
         quiesce(spark)
-        ts.sorted.apply(1)
+        if (err.isDefined) -1.0 else median.getOrElse(-1.0)
       } catch { case scala.util.control.NonFatal(_) => -1.0 }
-    val runSentinel = !isChild && only.isEmpty
+
+    val chunkFloors = mutable.ArrayBuffer.empty[(Seq[String], Double)]
     val (floorStart, anchorStart) =
-      if (runSentinel) (floorProbe(), sentinelAnchor()) else (-1.0, -1.0)
-
-    /** One timed pass over the in-process queries: per-query median of
-      * nRuns. Failures land in `errors` once, keyed by query. */
-    def timedPass(): Map[String, Double] = {
-      val results = inProcess.flatMap { case (name, fn) =>
-        val times = (1 to nRuns).flatMap { _ =>
-          // Quiesce before EVERY timed run, not just between queries: a
-          // checkpoint-heavy query's own run-1 blocks otherwise inflate
-          // runs 2-3 and drag the median (and the same cleanup cadence in
-          // sweep and isolated modes is what makes their medians
-          // comparable — the r10 sweep's graph-family numbers ran 1.5-3x
-          // over isolated because only isolated runs started clean).
-          quiesce(spark)
-          val t0 = System.nanoTime()
-          try {
-            consume(fn(spark, sfDir))
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch {
-            case e: Throwable =>
-              val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-              if (!errors.exists(_._1 == name))
-                errors :+= (name -> msg
-                  .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120))
-              None
-          }
+      if (only.isEmpty) (floorProbe(), sentinelAnchor()) else (-1.0, -1.0)
+    val results = (
+      if (only.isDefined) timeInProcess(names)
+      else names.grouped(ChunkSize).flatMap { chunk =>
+        quiesce(spark) // the parent idles with a drained block manager
+        childBench(chunk, nRuns, sfDir, cpus) match {
+          case Some(c) =>
+            c.errors.foreach { case (n, e) => errors.getOrElseUpdate(n, e) }
+            chunkFloors += ((chunk, c.floorSec))
+            c.times.toSeq
+          case None => timeInProcess(chunk)
         }
-        // Median of the successful runs (middle element, ties low).
-        if (times.isEmpty) None
-        else Some(name -> times.sorted.apply((times.size - 1) / 2))
-      }
-      results.toMap
-    }
+      }.toSeq
+    ).sortBy(_._1)
+    val selection =
+      if (only.isDefined) s"median-of-$nRuns-runs"
+      else s"median-of-$nRuns-runs+child-jvm-chunks-of-$ChunkSize"
 
-    /** Time the isolated family: fresh child JVM (its own warmup + the
-      * same median-of-nRuns), in-process fallback if the child fails. */
-    def isolatedPass(): Map[String, Double] =
-      if (isolated.isEmpty) Map.empty
-      else isolated.grouped(IsolatedChunk).flatMap { grp =>
-        quiesce(spark) // parent idles with a drained block manager
-        childBench(grp, nRuns, sfDir, cpus).getOrElse {
-          val fam = SparkEntry.queries.toSeq.sortBy(_._1)
-            .filter { case (n, _) => grp.contains(n) }
-          fam.foreach { case (_, fn) => // family warmup (skipped above)
-            try consume(fn(spark, sfDir)) catch { case _: Throwable => () }
-            quiesce(spark)
-          }
-          fam.flatMap { case (name, fn) =>
-            val times = (1 to nRuns).flatMap { _ =>
-              quiesce(spark)
-              val t0 = System.nanoTime()
-              try { consume(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-              catch {
-                case e: Throwable =>
-                  val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-                  if (!errors.exists(_._1 == name))
-                    errors :+= (name -> msg
-                      .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120))
-                  None
-              }
-            }
-            if (times.isEmpty) None
-            else Some(name -> times.sorted.apply((times.size - 1) / 2))
-          }.toMap
-        }
-      }.toMap
-
-    /** Isolate-all pass: every catalog query in fresh child JVMs, `chunk`
-      * queries per child. A failed child falls back to in-process timing
-      * for ITS chunk only (with its own warmup), so the sweep never
-      * loses queries — same contract as the graph-family fallback. */
-    def isolateAllPass(chunk: Int): Map[String, Double] = {
-      val names = queries.map(_._1)
-      names.grouped(chunk).flatMap { grp =>
-        quiesce(spark) // parent idles with a drained block manager
-        childBench(grp, nRuns, sfDir, cpus).getOrElse {
-          System.err.println(s"[bench] chunk ${grp.head}.. fell back in-process")
-          val fns = queries.filter { case (n, _) => grp.contains(n) }
-          fns.foreach { case (_, fn) =>
-            try consume(fn(spark, sfDir)) catch { case _: Throwable => () }
-            quiesce(spark)
-          }
-          fns.flatMap { case (name, fn) =>
-            val times = (1 to nRuns).flatMap { _ =>
-              quiesce(spark)
-              val t0 = System.nanoTime()
-              try { consume(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-              catch {
-                case e: Throwable =>
-                  val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-                  if (!errors.exists(_._1 == name))
-                    errors :+= (name -> msg
-                      .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120))
-                  None
-              }
-            }
-            if (times.isEmpty) None
-            else Some(name -> times.sorted.apply((times.size - 1) / 2))
-          }.toMap
-        }
-      }.toMap
-    }
-
-    // Sweep loop: per-query MIN of the sweep medians (with one sweep this
-    // is just the median — the historical behavior).
-    val sweepMaps = (1 to nSweeps).map { sw =>
-      currentSweep = sw
-      isolateChunk match {
-        case Some(c) => isolateAllPass(c)
-        case None    => timedPass() ++ isolatedPass()
-      }
-    }
-    val resultMap = sweepMaps.flatMap(_.keys).distinct.map { name =>
-      name -> sweepMaps.flatMap(_.get(name)).min
-    }.toMap
-    val results = resultMap.toSeq.sortBy(_._1)
-    val selection = {
-      val base =
-        if (nSweeps == 1) s"median-of-$nRuns-runs"
-        else s"min-of-$nSweeps-sweep-medians"
-      isolateChunk match {
-        case Some(c) => s"$base+child-jvm-chunks-of-$c"
-        case None    => base
-      }
-    }
-
-    val es = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-
-    // Locale-pinned 3-decimal formatting: the f"" interpolator uses the
-    // JVM default locale, and a comma-decimal locale would turn the
-    // summary line into invalid JSON the driver silently fails to parse.
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
-    // Measured per-query scheduling floor: consume() of a 1-row range
-    // through the exact timing path every query takes (xxhash64 +
-    // bit_xor aggregate + collect). tools/bench_proxy.py subtracts this
-    // from each per-query time to separate the fixed local[32]
-    // scheduling/collect floor from plan cost; before r15 it fell back
-    // to the fastest catalog query — an upper bound that overstated the
-    // floor. Two untimed consumes absorb the one-off codegen compile,
-    // then median of 5 on the warmed session.
     val floorSec = floorProbe()
-    // Sweep-end half of the drift sentinel (floorSec just above IS the
-    // end-of-sweep floor reading; pair it with the end anchor).
-    val anchorEnd = if (runSentinel) sentinelAnchor() else -1.0
+    val anchorEnd = if (only.isEmpty) sentinelAnchor() else -1.0
     val sentinelJson =
       s"""{"anchor":"$SentinelAnchor","floor_start":$floorStart,""" +
         s""""anchor_start":$anchorStart,"floor_end":$floorSec,""" +
         s""""anchor_end":$anchorEnd}"""
 
-    // Full-precision per-query detail, one entry per catalog query, for
-    // humans / the judge (committed as BENCH_DETAIL.json). Carries its
-    // own provenance: runs per median, sweep count, selection rule, and
-    // which queries were timed in the fresh child JVM.
+    // Full-precision per-query detail, one entry per timed query, with its
+    // provenance: runs per median, selection rule, the floor probe, one
+    // record per dispatched chunk with THAT child's floor (rows normalize
+    // against their own chunk's floor), and the drift sentinel.
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val isoJson = isolated.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Per-chunk floors (child-JVM dispatch only; empty otherwise): one
-    // record per dispatched chunk with its sweep index, FULL member
-    // list, and THAT child's end-of-run floor probe.
-    val chunkJson = chunkFloors.map { case (sw, qs, fl) =>
-      qs.map("\"" + _ + "\"").mkString(
-        s"""{"sweep":$sw,"queries":[""", ",", s"""],"floor_sec":$fl}""")
+    val chunkJson = chunkFloors.map { case (qs, fl) =>
+      qs.map("\"" + _ + "\"").mkString("""{"queries":[""", ",", s"""],"floor_sec":$fl}""")
     }.mkString("[", ",", "]")
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"errors":$es,"runs":$nRuns,"sweeps":$nSweeps,"selection":"$selection","isolated_child_jvm":$isoJson,"floor_sec":$floorSec,"chunk_floors":$chunkJson,"sentinel":$sentinelJson,"sf":"$sfDir"}"""
-    // A failed detail write must be LOUD: bench_proxy.py and the summary
-    // line's "detail" pointer both read the committed artifact, so a
-    // swallowed IOException leaves a stale file masquerading as current.
-    // Only a FULL IN-PROCESS sweep at the canonical bench scale may
-    // overwrite it — a full run at sf0.001 (e.g. a verify smoke) would
-    // replace the committed sf0.1 record with toy numbers, and an
-    // isolate-all run would replace it with child-chunked-methodology
-    // numbers the file's consumers don't expect (those runs carry their
-    // provenance only in `selection`; write them somewhere explicit via
-    // SPARK_GRAFT_BENCH_DETAIL_OUT — the committed isolated artifact is
-    // BENCH_DETAIL_ISOLATED.json).
-    if (only.isEmpty && isolateChunk.isEmpty && sfDir.endsWith("sf0.1")) {
-      try {
-        val w = new java.io.PrintWriter("BENCH_DETAIL.json")
-        try w.println(detail) finally w.close()
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] BENCH_DETAIL.json write FAILED: $e")
-      }
-    }
-    // Scale probes and other non-canonical sweeps need the full
-    // per-query detail too (the stdout line budgets to ~1.4 kB) —
-    // SPARK_GRAFT_BENCH_DETAIL_OUT writes it to an explicit path
-    // without touching the committed sf0.1 artifact.
-    sys.env.get("SPARK_GRAFT_BENCH_DETAIL_OUT").foreach { p =>
+      s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","queries":$fullQs,"errors":${errorsJson(errors.toSeq)},"runs":$nRuns,"selection":"$selection","floor_sec":$floorSec,"chunk_floors":$chunkJson,"sentinel":$sentinelJson,"sf":"$sfDir"}"""
+    // Only a full run at the canonical bench scale overwrites the
+    // committed BENCH_DETAIL.json (a full sf0.001 smoke would replace it
+    // with toy numbers); SPARK_GRAFT_BENCH_DETAIL_OUT writes any run's
+    // record to an explicit path. A failed write is LOUD: a swallowed
+    // IOException leaves a stale file masquerading as current.
+    val detailPaths =
+      (if (only.isEmpty && sfDir.endsWith("sf0.1")) Seq("BENCH_DETAIL.json")
+       else Nil) ++ sys.env.get("SPARK_GRAFT_BENCH_DETAIL_OUT")
+    detailPaths.foreach { p =>
       try {
         val w = new java.io.PrintWriter(p)
         try w.println(detail) finally w.close()
@@ -641,23 +412,7 @@ object Bench {
       }
     }
 
-    // The driver records only a bounded tail of this process's output, so
-    // the final JSON line must fit entirely inside it to parse (rounds
-    // 4-6 emitted ~2.5 kB lines -> "parsed": null). Budget the queries
-    // map: slowest first (the ones worth reading), 3-decimal seconds,
-    // stop before the line can exceed ~1.7 kB; the rest are counted in
-    // "omitted" and fully present in BENCH_DETAIL.json.
-    val budget = 1400
-    val ordered = results.sortBy(-_._2)
-      .map { case (k, v) => "\"" + k + "\":" + f3(v) }
-    val kept = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = 0
-    ordered.foreach { e =>
-      if (used + e.length + 1 <= budget) { kept += e; used += e.length + 1 }
-    }
-    val omitted = results.size - kept.size
-    val qs = kept.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"omitted":$omitted,"detail":"BENCH_DETAIL.json","errors":$es,"runs":$nRuns,"sweeps":$nSweeps,"sf":"$sfDir"}""")
+    println(summaryLine(results, errors.toSeq, nRuns, sfDir))
     spark.stop()
   }
 }

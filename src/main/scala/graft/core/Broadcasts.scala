@@ -14,17 +14,18 @@ import org.apache.spark.broadcast.Broadcast
   * construction stays executor-resident until ContextCleaner proves the
   * stub dead via GC — at >64M-edge corpora that is ~100 MB+ per triangles
   * invocation, and a repeated bench sweep can accumulate copies faster
-  * than the asynchronous cleaner drains them (r15 advisor). The returned
-  * DataFrame is lazy, so the query itself cannot destroy the broadcast
-  * eagerly; instead the creator registers it here and the harnesses
-  * (Bench.quiesce, TriangleBloomProbe) call [[drain]] after each collect.
+  * than the asynchronous cleaner drains them. The returned DataFrame is
+  * lazy, so the query itself cannot destroy the broadcast eagerly;
+  * instead the creator registers it here and the harnesses
+  * (Bench.quiesce, TriangleBloomProbe, perfbench) call [[drain]] after
+  * each collect.
   *
   * Entries are held through [[WeakReference]]s, so this registry never
   * extends a broadcast's lifetime: outside a harness, once the plan that
   * captured the stub is unreachable, GC clears the referent and
   * ContextCleaner reclaims the executor-resident copies exactly as it
-  * would without tracking (r16 advisor — a strong-ref ArrayBuffer was
-  * an unbounded driver leak for long-lived non-harness sessions).
+  * would without tracking (strong references would be an unbounded
+  * driver leak in long-lived non-harness sessions).
   * Cleared entries are pruned on every [[track]] call.
   */
 object Broadcasts {
@@ -34,7 +35,7 @@ object Broadcasts {
   def track[T](b: Broadcast[T]): Broadcast[T] = synchronized {
     // A stub collected between track calls and before the next drain()
     // would otherwise fall back to the async ContextCleaner — the exact
-    // nondeterministic window drain() exists to close (r17 advisor).
+    // nondeterministic window drain() exists to close.
     // Remove its blocks synchronously by id before forgetting the entry,
     // with the same best-effort guard as drain().
     live.filterInPlace { case (ref, id) =>
@@ -61,7 +62,7 @@ object Broadcasts {
     * changed data anyway. Entries whose stub GC'd between the collect
     * and this call cannot be `destroy()`ed, but leaving them to the
     * ASYNC ContextCleaner would let multi-hundred-MB bloom blocks
-    * survive into the next timed run (r17 review) — their blocks are
+    * survive into the next timed run — their blocks are
     * removed synchronously BY ID instead, the same block-manager call
     * the cleaner makes. */
   def drain(): Unit = synchronized {

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   *  - Tiny dims (region/nation) copy verbatim; unshifted nation FKs stay
   *    valid.
   *
-  * Usage: runMain graft.ScaleProbe [srcSfDir] [outBase] [factors]
+  * Usage: Test/runMain graft.ScaleProbe [srcSfDir] [outBase] [factors]
   *        (defaults: /root/testdata/sf0.1 /tmp/graft_scale 2,5,10)
   * Then time a family with the normal bench harness, one factor at a
   * time: SPARK_GRAFT_SF_DIR=<outBase>/x<N> SPARK_GRAFT_BENCH_ONLY=...

@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * splitting change partitioning, never matching) — a divergence fails
   * the probe before any timing is reported.
   *
-  * Usage: runMain graft.SkewProbe [srcDir] [runs] [configCsv]
+  * Usage: Test/runMain graft.SkewProbe [srcDir] [runs] [configCsv]
   *        (defaults: /tmp/graft_scale/x10  3  all-configs; pass a
   *        config subset to time one plan per fresh JVM — the ×100
   *        corpus showed heavy within-JVM position effects)

@@ -38,7 +38,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * partition by ts), which is what watermark advancement needs; order
   * within a micro-batch is immaterial to every operator probed.
   *
-  * Usage: runMain graft.StateScaleProbe [eventsSfDir] [nChunks]
+  * Usage: Test/runMain graft.StateScaleProbe [eventsSfDir] [nChunks]
   *        (defaults: /tmp/graft_scale/x10 10) */
 object StateScaleProbe {
 

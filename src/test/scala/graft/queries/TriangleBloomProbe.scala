@@ -16,7 +16,7 @@ import org.apache.spark.sql.{SparkSession, functions}
   * equality on fixtures, this probe pins it at probe scale with the
   * wall-clock evidence SCALE_PROBE.md cites).
   *
-  * Usage: runMain graft.queries.TriangleBloomProbe [sfDir] [runs] [bucketCounts]
+  * Usage: Test/runMain graft.queries.TriangleBloomProbe [sfDir] [runs] [bucketCounts]
   *        (defaults: /root/testdata/sf0.1  3  "1,4,16")
   * Prints one JSON line:
   *   {"edge_rows":N,"configs":{"b1":{"n_buckets":1,"median_sec":...,
