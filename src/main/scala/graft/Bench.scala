@@ -137,27 +137,38 @@ object Bench {
   private def f3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  private def errorsJson(errors: Seq[(String, String)]): String =
+  private def errorEntries(errors: Seq[(String, String)]): Seq[String] =
     errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+
+  private def errorsJson(errors: Seq[(String, String)]): String =
+    errorEntries(errors).mkString("{", ",", "}")
 
   /** The one-line JSON summary on stdout. Its reader keeps only a bounded
-    * tail of this process's output (~2.5 kB lines came back unparsed), so the
-    * queries map is budgeted to 1400 bytes: slowest first, 3-decimal
-    * seconds; the rest are counted in "omitted" and present in full in
-    * the detail record. */
+    * tail of this process's output (~2.5 kB lines came back unparsed), so
+    * the two maps share a 1400-byte budget: errors first, in at most half
+    * of it, then queries slowest first with 3-decimal seconds. What does
+    * not fit is counted in "omitted" / "errors_omitted" and present in
+    * full in the detail record. */
   def summaryLine(results: Seq[(String, Double)],
                   errors: Seq[(String, String)],
                   nRuns: Int, sfDir: String): String = {
-    val budget = 1400
-    val kept = mutable.ArrayBuffer.empty[String]
-    var used = 0
-    results.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .foreach { e =>
-        if (used + e.length + 1 <= budget) { kept += e; used += e.length + 1 }
+    var left = 1400
+    // The entries that fit `cap` bytes, comma included, charged to `left`.
+    def fit(entries: Seq[String], cap: Int): Seq[String] = {
+      var used = 0
+      val kept = entries.filter { e =>
+        val n = e.getBytes("UTF-8").length + 1
+        val ok = used + n <= cap
+        if (ok) used += n
+        ok
       }
+      left -= used
+      kept
+    }
+    val keptErrors = fit(errorEntries(errors), left / 2)
+    val kept = fit(results.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + f3(v) }, left)
     val total = results.map(_._2).sum
-    s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"queries":${kept.mkString("{", ",", "}")},"omitted":${results.size - kept.size},"detail":"BENCH_DETAIL.json","errors":${errorsJson(errors)},"runs":$nRuns,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"queries":${kept.mkString("{", ",", "}")},"omitted":${results.size - kept.size},"detail":"BENCH_DETAIL.json","errors":${keptErrors.mkString("{", ",", "}")},"errors_omitted":${errors.size - keptErrors.size},"runs":$nRuns,"sf":"$sfDir"}"""
   }
 
   /** A classpath a child JVM can boot from. The forked JVM's own

@@ -29,7 +29,7 @@ import graft.functions.TextFunctions
   * the same `pmod(xxhash64(s), P)` ([[TextFunctions.fastShingleHash]] —
   * seed-42 XXH64 over the UTF-8 bytes), folded through the same 18
   * `min((a_i*h + b_i) mod P)` permutations. Existing materialized band
-  * artifacts therefore stay valid — same logic fingerprint, same bytes.
+  * artifacts therefore stay valid — same logic descriptor, same bytes.
   *
   * Returns NULL for documents with fewer than k tokens (they produce no
   * shingle rows relationally, hence no signature row).

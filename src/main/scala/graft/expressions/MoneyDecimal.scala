@@ -6,8 +6,8 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Cast, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, EmptyBlock, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType, Decimal, DecimalType, DoubleType}
@@ -60,12 +60,14 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType, Decimal, DecimalT
   * already fast (the slow path this expression exists to bypass —
   * `Double.toString` + BigDecimal parse — is double-specific).
   *
-  * The slow path re-evaluates `child` (both `slowCast.eval(input)` and
-  * the embedded `castGen` code re-run the child expression), so a
-  * NON-deterministic child could be slow-cast from a different value
-  * than the one that failed the fast test — [[checkInputDataTypes]]
-  * therefore rejects non-deterministic children at analysis time
-  * instead of miscomputing at runtime.
+  * The generated slow path casts the child value the fast test already
+  * computed (the child's code is emitted once: emitted twice, a local it
+  * declares is a Janino redefinition error and the whole stage falls
+  * back to the interpreted plan). The interpreted slow path,
+  * `slowCast.eval(input)`, re-evaluates `child`, so a NON-deterministic
+  * child could be slow-cast from a different value than the one that
+  * failed the fast test — [[checkInputDataTypes]] therefore rejects
+  * non-deterministic children at analysis time.
   */
 case class MoneyDecimal(child: Expression, precision: Int, scale: Int)
     extends UnaryExpression with ExpectsInputTypes {
@@ -112,7 +114,18 @@ case class MoneyDecimal(child: Expression, precision: Int, scale: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val childGen = child.genCode(ctx)
-    val castGen = slowCast.genCode(ctx)
+    // The slow-path cast reads the child's value through a bound
+    // reference resolved against the current input vars, as operators
+    // that hand evaluated columns to expressions do; with INPUT_ROW
+    // unset the cast's code is never split into a method that could not
+    // see the child's locals.
+    val (inputRow, inputVars) = (ctx.INPUT_ROW, ctx.currentVars)
+    ctx.INPUT_ROW = null
+    ctx.currentVars = Seq(childGen.copy(code = EmptyBlock))
+    val castGen =
+      try slowCast.withNewChildren(Seq(BoundReference(0, DoubleType, child.nullable)))
+        .genCode(ctx)
+      finally { ctx.INPUT_ROW = inputRow; ctx.currentVars = inputVars }
     val javaType = CodeGenerator.javaType(dataType)
     val d = ctx.freshName("mdD")
     val u = ctx.freshName("mdU")

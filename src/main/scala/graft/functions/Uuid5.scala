@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** RFC-4122 version-5 (SHA-1 name-based) UUID, byte-exact with Python's
   * `uuid.uuid5` — the reference derives its serving-table surrogate keys as
@@ -18,25 +18,11 @@ import org.apache.spark.sql.functions._
   */
 object Uuid5 {
 
-  /** RFC-4122 DNS namespace: 6ba7b810-9dad-11d1-80b4-00c04fd430c8. */
-  val NamespaceDns: Array[Byte] =
-    Array(0x6b, 0xa7, 0xb8, 0x10, 0x9d, 0xad, 0x11, 0xd1,
-      0x80, 0xb4, 0x00, 0xc0, 0x4f, 0xd4, 0x30, 0xc8).map(_.toByte)
-
   /** uuid5(NAMESPACE_DNS, name) as a native-expression Column. */
   def uuid5(name: Column): Column =
     org.apache.spark.sql.graft.Uuid5Expr.uuid5(name)
 
-  /** Driver-side / test twin of [[uuid5]] (same bytes, plain JVM). */
-  def uuid5Jvm(name: String): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-1")
-    md.update(NamespaceDns)
-    md.update(name.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val b = md.digest()
-    b(6) = ((b(6) & 0x0f) | 0x50).toByte
-    b(8) = ((b(8) & 0x3f) | 0x80).toByte
-    val hex = b.take(16).map(x => f"$x%02x").mkString
-    s"${hex.substring(0, 8)}-${hex.substring(8, 12)}-${hex.substring(12, 16)}-" +
-      s"${hex.substring(16, 20)}-${hex.substring(20, 32)}"
-  }
+  /** Driver-side / test twin of [[uuid5]]: the expression's own digest. */
+  def uuid5Jvm(name: String): String =
+    org.apache.spark.sql.graft.Uuid5Expr.uuid5(UTF8String.fromString(name)).toString
 }

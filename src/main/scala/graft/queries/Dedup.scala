@@ -36,9 +36,9 @@ import Catalog._
 object Dedup extends QueryGroup {
 
   /** LSH geometry, referenced by both the queries below AND the
-    * [[Materialized]] artifact fingerprints — change one here and every
-    * stale on-disk artifact self-invalidates (the fingerprint is built
-    * from these vals, never from re-typed literals). */
+    * [[Materialized]] artifact logic descriptors — change one here and
+    * every stale on-disk artifact self-invalidates (the descriptor is
+    * built from these vals, never from re-typed literals). */
   private[queries] val ShingleK = 3
   private[queries] val NumBands = 9
   private[queries] val RowsPerBand = 2
@@ -276,7 +276,7 @@ object Dedup extends QueryGroup {
     * below the corpus. Rounds needed = eccentricity of the min-id node,
     * tiny for near-dup clusters. `localCheckpoint` (eager) bounds lineage
     * to one round and keeps the final plan a flat scan; nothing registers
-    * in the cache manager (PlanAudit's empty-cache invariant holds). */
+    * in the cache manager (PlanAuditSpec's empty-cache invariant holds). */
   /** Converged (id, lab) min-label relation over the verified near-dup
     * pair graph — the shared core of `q_dedup_cluster` and the keep-best
     * policy in [[Inference]] (`q_dedup_keep_best`). */

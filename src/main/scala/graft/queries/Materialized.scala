@@ -1,10 +1,10 @@
 package graft.queries
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Artifacts
+import graft.core.Artifacts.readCached
 import graft.core.Checkpoints.MaterializeOps
 
 /** Materialized-artifact variants of the dedup/ANN/graph operators — the
@@ -29,86 +29,27 @@ import graft.core.Checkpoints.MaterializeOps
   *    `q_graph_triangles_pre`: the degree-oriented adjacency.
   *
   * All return byte-identical results to their from-scratch twins and are
-  * checked against the same DuckDB oracle SQL. Artifacts land under
-  * `target/artifacts/<sf-dir-slug>/` — derived deterministically from
-  * static testdata, so the marker-file cache is safe; a real deployment
-  * would rebuild on corpus version bumps.
+  * checked against the same DuckDB oracle SQL. [[Artifacts.ensure]]
+  * keys each artifact on its logic descriptor and its input table, so a
+  * logic change or a regenerated input rebuilds it.
   */
 object Materialized extends QueryGroup {
 
-  /** Logic fingerprint baked into each artifact path: any change to the
-    * constants that determine artifact CONTENT (MinHash coefficients /
-    * modulus / shingle size / band packing; IVF plane constant / anchor
-    * offset / cell count / quantize scale) changes the directory name, so
-    * the `_SUCCESS` marker of a stale artifact is never found and the
-    * artifact rebuilds — instead of silently serving parquet computed by
-    * old logic while the from-scratch twin uses new logic. */
-  private def fingerprint(descriptor: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(descriptor.getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-
-  // Descriptors reference the live constants in Dedup/Similarity/
-  // TextFunctions — never re-typed literals — so changing any of them
-  // changes the path and stale artifacts rebuild instead of being reused.
-  private val minhashFp = fingerprint(
+  // Logic descriptors: they reference the live constants in Dedup/
+  // Similarity/TextFunctions — never re-typed literals — so changing any
+  // constant that determines artifact CONTENT (MinHash coefficients /
+  // modulus / shingle size / band packing; IVF plane constant / anchor
+  // offset / cell count / quantize scale) changes the artifact key and
+  // the artifact rebuilds instead of serving parquet computed by old
+  // logic while the from-scratch twin uses new logic.
+  private val minhashLogic =
     "minhash|P=" + graft.functions.TextFunctions.HashP +
       s"|k=${Dedup.ShingleK}|bands=${Dedup.NumBands}x${Dedup.RowsPerBand}" +
-      "|coeffs=" + graft.functions.TextFunctions.MinHashCoeffs.mkString(","))
+      "|coeffs=" + graft.functions.TextFunctions.MinHashCoeffs.mkString(",")
 
-  private val ivfFp = fingerprint(
+  private val ivfLogic =
     s"ivf|plane=${Similarity.PlaneMult}|anchorOffset=${Similarity.AnchorOffset}" +
-      s"|cells=${Similarity.NumCells}|quant=${Similarity.QuantScale}")
-
-  private def artDir(d: String, name: String, fp: String): String =
-    s"target/artifacts/${d.replaceAll("[^A-Za-z0-9._-]", "_")}/${name}_$fp"
-
-  /** Per-artifact-path build locks (JVM-wide). */
-  private val buildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  /** Single-flight build: run `build` unless the `sentinel` file (by
-    * default the writer's `_SUCCESS`) exists. Builds of one path are
-    * serialized inside the JVM and the sentinel is re-checked under the
-    * lock, so concurrent first calls (two twins sharing `sym_edges`)
-    * build once instead of racing two `overwrite` writes into one
-    * directory. */
-  private def ensure(path: String, sentinel: String = "_SUCCESS")(
-      build: => Unit): Unit = {
-    val done = new File(s"$path/$sentinel")
-    if (!done.exists())
-      buildLocks.computeIfAbsent(path, _ => new Object).synchronized {
-        if (!done.exists()) build
-      }
-  }
-
-  /** Session-scoped resolved-relation cache for the immutable artifacts.
-    * Why: `spark.read.parquet` builds a fresh InMemoryFileIndex per
-    * call, and at the ×100 scale probe the sym-edges layout's ~2k
-    * directories cost 5.4 s of the query's 6.4 s total JUST in
-    * re-listing (SCALE_PROBE.md) — a per-construction driver
-    * cost a real deployment amortizes through its table catalog (a
-    * metastore or Delta log caches the file listing; re-enumerating an
-    * immutable table per query is not a cost any production reader
-    * pays). Artifact paths are content-fingerprinted and written once,
-    * so caching the resolved relation is sound; rebuilt artifacts land
-    * at new paths.
-    *
-    * Mechanism: a TEMP VIEW in the session's own catalog, named from
-    * the path's fingerprint — the analyzed plan (and its file index)
-    * is stored by the session and `s.table` reuses it, so the cache's
-    * lifecycle IS the session's. The earlier cut used an external
-    * `WeakHashMap[SparkSession, DataFrame]`, which can never collect:
-    * the cached DataFrame strongly references its session through
-    * `queryExecution`, defeating the weak key. */
-  private def readCached(s: SparkSession, path: String): DataFrame = {
-    val vn = "graft_artifact_" + fingerprint(path)
-    synchronized {
-      if (!s.catalog.tableExists(vn))
-        s.read.parquet(path).createOrReplaceTempView(vn)
-    }
-    s.table(vn)
-  }
+      s"|cells=${Similarity.NumCells}|quant=${Similarity.QuantScale}"
 
   /** Memoized sym-edges sidecar values: (bucket count, anchor id,
     * anchor bucket) keyed by artifact path. */
@@ -118,24 +59,18 @@ object Materialized extends QueryGroup {
   /** One-time build: persist the MinHash band table. Plain parquet — the
     * band self-join shuffles on (band_idx, band_key) either way; the win
     * is never re-shingling/re-hashing the corpus. */
-  def buildMinhashBands(s: SparkSession, d: String): String = {
-    val path = artDir(d, "minhash_bands", minhashFp)
-    ensure(path) {
-      Dedup.bandTable(s, d).write.mode("overwrite").parquet(path)
+  def buildMinhashBands(s: SparkSession, d: String): String =
+    Artifacts.ensure(d, "minhash_bands", Seq("documents"), minhashLogic) {
+      out => Dedup.bandTable(s, d).write.mode("overwrite").parquet(out)
     }
-    path
-  }
 
   /** One-time build: persist the IVF inverted file, partitioned by cell
     * so probes prune unprobed cells at the directory level. */
-  def buildIvfCells(s: SparkSession, d: String): String = {
-    val path = artDir(d, "ivf_cells", ivfFp)
-    ensure(path) {
+  def buildIvfCells(s: SparkSession, d: String): String =
+    Artifacts.ensure(d, "ivf_cells", Seq("embeddings"), ivfLogic) { out =>
       Similarity.ivfAssignment(s, d)
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
+        .write.mode("overwrite").partitionBy("cell").parquet(out)
     }
-    path
-  }
 
   /** Materialized twin of `q_graph_pagerank`: the same code path
     * ([[Graph.pagerankGrouped]]) over the standing [[buildSymEdges]]
@@ -145,7 +80,7 @@ object Materialized extends QueryGroup {
 
   // Content depends on the degree-rank packing (deg << 40 | id) and the
   // sorted-array layout; version both so a packing change rebuilds.
-  private val orientedAdjFp = fingerprint("orientedadj|pack40|sorted-v1")
+  private val orientedAdjLogic = "orientedadj|pack40|sorted-v1"
 
   /** One-time build: the GROUPED degree-oriented adjacency
     * (u, sorted nbrs) — the storage-side artifact for triangle counting.
@@ -156,13 +91,11 @@ object Materialized extends QueryGroup {
     * broadcast-shaped reads of this relation. */
   def buildOrientedAdjacency(s: SparkSession, d: String): String = {
     import s.implicits._
-    val path = artDir(d, "oriented_adj", orientedAdjFp)
-    ensure(path) {
-      Graph.orientedEdgesFromAdjacency(Graph.symAdjacency(s, d).materialized)
+    Artifacts.ensure(d, "oriented_adj", Seq("lineitem"), orientedAdjLogic) {
+      out => Graph.orientedEdgesFromAdjacency(Graph.symAdjacency(s, d).materialized)
         .groupBy($"u").agg(sort_array(collect_list($"v")).as("nbrs"))
-        .write.mode("overwrite").parquet(path)
+        .write.mode("overwrite").parquet(out)
     }
-    path
   }
 
   /** Materialized twin of `q_graph_triangles`: the same bloom-pruned
@@ -188,8 +121,8 @@ object Materialized extends QueryGroup {
   private[queries] val SymEdgeRowsPerBucket = 65536L
   private[queries] val SymEdgeMinBuckets = 64
 
-  private val symEdgesFp = fingerprint(
-    s"symedges|rpb=$SymEdgeRowsPerBucket|min=$SymEdgeMinBuckets|grouped-v3")
+  private val symEdgesLogic =
+    s"symedges|rpb=$SymEdgeRowsPerBucket|min=$SymEdgeMinBuckets|grouped-v3"
 
   /** One-time build: the [[Graph.symAdjacency]] rows `(src, deg, nbrs)`
     * laid out in hash-of-src directory partitions `sb` (count from
@@ -206,9 +139,9 @@ object Materialized extends QueryGroup {
     * The sidecar directory is underscore-prefixed, so the partitioned
     * read ignores it; the build sentinel is the SIDECAR's `_SUCCESS`,
     * written last — a crash mid-build leaves no sentinel and rebuilds. */
-  def buildSymEdges(s: SparkSession, d: String): String = {
-    val path = artDir(d, "sym_edges", symEdgesFp)
-    ensure(path, "_graft_meta/_SUCCESS") {
+  def buildSymEdges(s: SparkSession, d: String): String =
+    Artifacts.ensure(d, "sym_edges", Seq("lineitem"), symEdgesLogic,
+        sentinel = "_graft_meta/_SUCCESS") { path =>
       import s.implicits._
       val adj = Graph.symAdjacency(s, d).materialized
       // Edge volume sizes the layout; min(src) is the BFS anchor.
@@ -237,8 +170,6 @@ object Materialized extends QueryGroup {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/_graft_meta")
     }
-    path
-  }
 
   /** Bucket-pruned twin of `q_graph_reachability`: the same 2-hop
     * min-depth BFS from min(src), but over the [[buildSymEdges]]
@@ -272,8 +203,9 @@ object Materialized extends QueryGroup {
     // Bounded sidecar read at plan-construction time (1 row — same
     // class as the memoized fixtures): the layout's bucket count and
     // the build-time BFS anchor.
-    // Sidecar values are immutable data at a fingerprinted path —
-    // memoize across constructions (JVM-wide, not per-session).
+    // Sidecar values are immutable data at a keyed path — memoize
+    // across constructions (JVM-wide, not per-session), so the plain
+    // read runs once per artifact path.
     val (nb, anchorId, anchorBucket) = symEdgeMeta
       .computeIfAbsent(base, _ => {
         val m = s.read.parquet(s"$base/_graft_meta").head
@@ -305,12 +237,12 @@ object Materialized extends QueryGroup {
   }
 
   private def dedupJaccardPre(s: SparkSession, d: String): DataFrame = {
-    val bands = s.read.parquet(buildMinhashBands(s, d))
+    val bands = readCached(s, buildMinhashBands(s, d))
     Dedup.verifyJaccard(s, d, Dedup.bandCandidates(bands))
   }
 
   private def annIvfPre(s: SparkSession, d: String): DataFrame = {
-    val table = s.read.parquet(buildIvfCells(s, d))
+    val table = readCached(s, buildIvfCells(s, d))
     Similarity.ivfScore(Similarity.ivfProbes(s, d), table)
   }
 

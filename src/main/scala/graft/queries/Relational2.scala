@@ -623,7 +623,7 @@ object Relational2 extends QueryGroup {
 
   /** Correlated EXISTS — customers holding at least one urgent
     * high-value order. Catalyst decorrelates to a LEFT SEMI join (the
-    * PlanAudit gate sees exactly the q_join_semi shape), so the "per-row
+    * PlanAuditSpec gate sees exactly the q_join_semi shape), so the "per-row
     * subquery" the SQL reads as costs one co-partitioned pass. */
   private def subqueryExists(s: SparkSession, d: String): DataFrame = {
     Tables.customer(s, d).createOrReplaceTempView("sq_customer")

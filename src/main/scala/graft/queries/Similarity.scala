@@ -36,7 +36,7 @@ object Similarity extends QueryGroup {
 
   /** Quantizer/LSH/IVF geometry, referenced by the queries, the DuckDB
     * oracle SQL fragments below, AND the [[Materialized]] artifact
-    * fingerprints — single source of truth so a constant change here
+    * descriptors — single source of truth so a constant change here
     * self-invalidates stale on-disk artifacts and keeps both engines in
     * lockstep. */
   private[queries] val QuantScale: Long = 10000000L // floor(x * 1e7)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import Catalog._
 
 /** Source-format surface — SURVEY.md §2B "CSV scan with explicit schema" /
@@ -132,110 +132,26 @@ object Sources extends QueryGroup {
       .orderBy($"region_from_path")
   }
 
-  /** S3/A4: latest-partition selection. Orders are laid out partitioned by
-    * year; the query reads ONLY the max partition (static pruning via a
-    * literal-resolvable filter), the idiomatic replacement for the
-    * reference's list-sort-by-LastModified scan. */
-  /** Cache key for a memoized mirror of `<d>/<table>.parquet`: sf dir
-    * name + source length + full-resolution mtime + a CRC32 content
-    * fingerprint of the file's first and last 64 KiB (the parquet footer
-    * lives in the tail, so any regenerated drop changes it even at
-    * identical length/mtime-second), so a driver rewrite between rounds
-    * invalidates the fixture instead of silently serving stale rows
-    * against a fresh oracle. O(128 KiB) read per session — negligible. */
-  private def fixtureKey(d: String, table: String): String = {
-    val src = new java.io.File(d, s"$table.parquet")
-    // A Spark-written table is a DIRECTORY of part files (the scale-probe
-    // corpora are laid out that way); a driver-written one is a single
-    // file. Fingerprint the first part file in the directory case, and
-    // fold every part's (name, length, mtime) into the CRC so adding or
-    // rewriting ANY part invalidates, not just the sampled one.
-    val crc = new java.util.zip.CRC32
-    val dataFile =
-      if (!src.isDirectory) src
-      else {
-        val parts = Option(src.listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isFile && f.getName.startsWith("part-"))
-          .sortBy(_.getName)
-        require(parts.nonEmpty, s"no part files under $src")
-        parts.foreach { p =>
-          crc.update(s"${p.getName}:${p.length}:${p.lastModified};"
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
-        parts.head
-      }
-    val raf = new java.io.RandomAccessFile(dataFile, "r")
-    try {
-      val n = math.min(65536L, raf.length).toInt
-      val head = new Array[Byte](n)
-      raf.readFully(head); crc.update(head)
-      if (raf.length > 65536L) {
-        raf.seek(raf.length - 65536L)
-        val tail = new Array[Byte](65536)
-        raf.readFully(tail); crc.update(tail)
-      }
-    } finally raf.close()
-    s"${new java.io.File(d).getName}_${dataFile.length}_${dataFile.lastModified}" +
-      s"_${java.lang.Long.toHexString(crc.getValue)}"
-  }
-
-  /** Lay out (once per source snapshot) a derived input fixture at
-    * `<prefix>_<key>` and return its path, pruning fixtures of
-    * SUPERSEDED snapshots of the same sf dir — without this, one stale
-    * dir per regenerated testdata drop accumulates for the life of
-    * `target/tmp`. Fixtures for other sf dirs (smoke at sf0.001, verify
-    * at sf0.01, bench at sf0.1 coexist in one checkout) are kept.
-    * `sentinel` is the file whose existence marks a completed layout
-    * (a plain parquet write leaves `_SUCCESS` at the root; a
-    * multi-batch layout names its LAST batch's marker). */
-  /** Serializes fixture layout + pruning: two concurrent first uses of
-    * one fixture (ConcurrencySpec's self-race shape) would otherwise
-    * both miss the sentinel and run overlapping overwrite writes to the
-    * same path. One JVM writes these fixtures, so an object monitor
-    * suffices. */
-  private val mirrorLock = new Object
-
-  private def memoFixture(d: String, prefix: String, table: String,
-      sentinel: String = "_SUCCESS")(layout: String => Unit): String = {
-    val out = tmp(s"${prefix}_${fixtureKey(d, table)}")
-    val outDir = new java.io.File(out)
-    val sfScope = s"${prefix}_${new java.io.File(d).getName}_"
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-      f.delete(); ()
-    }
-    mirrorLock.synchronized {
-      if (!new java.io.File(out, sentinel).exists()) {
-        // Prune superseded snapshots of the same sf dir ONLY when about
-        // to lay out their replacement — pruning on every call could
-        // delete a fixture an in-flight plan (keyed to the old
-        // fingerprint) is still reading mid-scan.
-        Option(outDir.getParentFile.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(f => (f.getName.startsWith(sfScope) ||
-            // pre-r17 fixed-path layout of the same fixture (no key
-            // suffix) — never matched by sfScope, would linger forever
-            f.getName == prefix) && f.getName != outDir.getName)
-          .foreach(deleteRec)
-        layout(out)
-      }
-    }
-    out
-  }
-
-  private def ordersMirror(s: SparkSession, d: String, prefix: String): String = {
+  /** Orders partitioned by year: an input fixture laid out once per
+    * source snapshot by [[Artifacts.ensure]], which rebuilds it when the
+    * orders table or the layout version changes. Fixtures are read with
+    * a plain `s.read` rather than [[Artifacts.readCached]]: the read is
+    * the operator these queries test. */
+  private def ordersMirror(s: SparkSession, d: String, name: String): String = {
     import s.implicits._
-    memoFixture(d, prefix, "orders") { out =>
+    Artifacts.ensure(d, name, Seq("orders"), "orders|partitionBy=yr|v1") { out =>
       Tables.orders(s, d)
         .withColumn("yr", year($"o_orderdate"))
         .write.mode("overwrite").partitionBy("yr").parquet(out)
     }
   }
 
+  /** S3/A4: latest-partition selection. Orders are laid out partitioned by
+    * year; the query reads ONLY the max partition (static pruning via a
+    * literal-resolvable filter), the idiomatic replacement for the
+    * reference's list-sort-by-LastModified scan. */
   private def latestPartition(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // Input fixture, laid out once per source snapshot (same rationale
-    // as joinDpp's mirror below).
     val part = s.read.parquet(ordersMirror(s, d, "orders_by_year"))
     val maxYr = part.agg(max($"yr")).head.getInt(0)
     part.filter($"yr" === maxYr)
@@ -259,9 +175,7 @@ object Sources extends QueryGroup {
     import s.implicits._
     // The partitioned mirror is INPUT fixture, not the surface under
     // test (contrast the roundtrip queries, where the write IS the
-    // operator) — lay it out once per source snapshot and reuse;
-    // `sbt clean`, deleting target/tmp, or a regenerated testdata drop
-    // (fingerprinted key) invalidates.
+    // operator).
     val fact = s.read.parquet(ordersMirror(s, d, "orders_by_year_dpp"))
     val dim = Tables.orders(s, d)
       .filter($"o_orderpriority" === "1-URGENT" &&
@@ -286,13 +200,13 @@ object Sources extends QueryGroup {
     * the data files are never rewritten. */
   private def schemaEvolution(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // Input fixture, laid out once per source snapshot (r17; same
-    // rationale as ordersMirror): the capability under test is the
-    // mergeSchema READ over files with divergent footers — re-WRITING
-    // the two batches on every run timed fixture setup, not the
-    // operator (BASELINE.md r17 comparability note).
-    val out = memoFixture(d, "customer_evolving", "customer",
-      sentinel = "batch=v2/_SUCCESS") { o =>
+    // Input fixture, laid out once per source snapshot: the capability
+    // under test is the mergeSchema READ over files with divergent
+    // footers — re-WRITING the two batches on every run timed fixture
+    // setup, not the operator. The v2 batch is written last, so its
+    // marker is the sentinel.
+    val out = Artifacts.ensure(d, "customer_evolving", Seq("customer"),
+        "customer|batches=v1,v2|v1", sentinel = "batch=v2/_SUCCESS") { o =>
       val c = Tables.customer(s, d)
       c.filter($"c_custkey" % 2 === 0)
         .select($"c_custkey", $"c_acctbal")
@@ -317,9 +231,10 @@ object Sources extends QueryGroup {
     * the question). The oracle computes the flat equivalent. */
   private def nestedPruning(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // Input fixture, laid out once per source snapshot (r17): the
-    // capability is leaf-level ReadSchema pruning on the READ path.
-    val out = memoFixture(d, "orders_nested", "orders") { o =>
+    // Input fixture, laid out once per source snapshot: the capability
+    // is leaf-level ReadSchema pruning on the READ path.
+    val out = Artifacts.ensure(d, "orders_nested", Seq("orders"),
+        "orders|meta=status,total,priority|v1") { o =>
       Tables.orders(s, d)
         .select($"o_orderkey",
           struct($"o_orderstatus".as("status"), $"o_totalprice".as("total"),

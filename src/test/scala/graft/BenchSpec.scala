@@ -45,4 +45,21 @@ class BenchSpec extends AnyFunSuite {
     // Slowest first: the largest synthetic time is among the kept entries.
     assert(json.get("queries").has("q_synthetic_query_225"))
   }
+
+  test("63 long errors still leave the summary line within 1.7 kB") {
+    val results = (1 to 225).map(i => f"q_synthetic_query_$i%03d" -> i * 0.137)
+    // A failed query leaves the results; its error takes up to 120 chars.
+    val errors = (1 to 63).map(i => f"q_failed_query_$i%03d" ->
+      ("[PATH_NOT_FOUND] Path does not exist: file:/data/sf0.1/documents" +
+        ".parquet " + "x" * 60).take(120))
+    val line = Bench.summaryLine(results.drop(63), errors, 3, "/data/sf0.1")
+    assert(line.getBytes("UTF-8").length <= 1700, s"${line.length} bytes")
+    val json = new ObjectMapper().readTree(line)
+    val keptQ = json.get("queries").size
+    val keptE = json.get("errors").size
+    assert(keptQ > 0 && keptE > 0, s"kept $keptQ queries, $keptE errors")
+    assert(keptQ + json.get("omitted").asInt == 162)
+    assert(json.get("n_queries").asInt == 162)
+    assert(keptE + json.get("errors_omitted").asInt == 63)
+  }
 }

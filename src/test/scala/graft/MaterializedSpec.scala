@@ -34,8 +34,12 @@ class MaterializedSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   override protected def beforeAll(): Unit = {
     super.beforeAll()
-    // Force a fresh artifact build for this testdata dir.
-    deleteArtifacts()
+    // Force a fresh build of the four artifacts, so the twins below
+    // check the current build code, not a directory an earlier build
+    // left under the same key (the key covers the logic descriptor and
+    // the input, not the builder's code).
+    Seq("minhash_bands_", "ivf_cells_", "sym_edges_", "oriented_adj_")
+      .foreach(deleteArtifacts)
   }
 
   private val twins = Seq(

@@ -153,4 +153,15 @@ class MoneyDecimalSpec extends AnyFunSuite with SparkTestBase {
       }
     }
   }
+
+  test("q_agg_corr compiles its generated code: no interpreted fallback") {
+    // money_decimal once emitted its child's code twice (fast test and
+    // slow-path cast), and Janino rejects a local the child declares
+    // ("Redefinition of local variable columnartorow_isNull_2"). With
+    // fallback off, a plan that fails to compile fails the collect.
+    val strict = spark.newSession()
+    strict.conf.set("spark.sql.codegen.fallback", "false")
+    val rows = SparkEntry.queries("q_agg_corr")(strict, Sf0001).collect()
+    assert(rows.nonEmpty)
+  }
 }

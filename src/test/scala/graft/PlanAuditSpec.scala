@@ -257,9 +257,9 @@ class PlanAuditSpec extends SparkTestBase {
   }
 }
 
-/** Audited baseline: regenerate with
-  * `sbt "runMain graft.PlanAudit --counts /root/testdata/sf0.001"`
-  * and review the diff before pasting — every increase must be justified. */
+/** Audited baseline: `sbt "Test/runMain graft.PlanAuditDump"` prints
+  * every query whose observed count differs from its budget; review the
+  * diff before editing — every increase must be justified. */
 object PlanAuditSpec {
   val baseline: Map[String, Int] = Map(
     "q_agg_collect_sorted" -> 2,

@@ -20,12 +20,12 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   val Sf0001 = "/root/testdata/sf0.001"
 
-  /** Delete the sf0.001 materialized artifacts whose directory name
-    * starts with `prefix` (all of them by default), and drop the
-    * session's cached artifact relations: their file listings would
-    * otherwise name the deleted files once an artifact is rebuilt. */
-  def deleteArtifacts(prefix: String = ""): Unit = {
-    val root = new java.io.File("target/artifacts/_root_testdata_sf0.001")
+  /** Delete the sf0.001 artifacts whose directory name starts with
+    * `prefix`, and drop the session's cached artifact relations: their
+    * file listings would otherwise name the deleted files once an
+    * artifact is rebuilt. */
+  def deleteArtifacts(prefix: String): Unit = {
+    val root = new java.io.File(graft.core.Artifacts.sfRoot(Sf0001))
     Option(root.listFiles()).toSeq.flatten
       .filter(_.getName.startsWith(prefix))
       .foreach(org.apache.commons.io.FileUtils.deleteQuietly)

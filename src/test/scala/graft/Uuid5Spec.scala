@@ -20,6 +20,23 @@ class Uuid5Spec extends SparkTestBase {
     "NATION_0" -> "eca51a0d-3ccf-5412-ad05-6f18cce37151",
     "src7" -> "69aac5bc-9adf-5e39-b952-792a220a1d44")
 
+  /** Independent reference: `String.getBytes`, its own DNS namespace
+    * constant, version/variant bits and hex formatting — none of
+    * `Uuid5Expr`'s code, so the twin tests below compare two digests. */
+  private def uuid5Reference(name: String): String = {
+    val namespaceDns = Array(0x6b, 0xa7, 0xb8, 0x10, 0x9d, 0xad, 0x11, 0xd1,
+      0x80, 0xb4, 0x00, 0xc0, 0x4f, 0xd4, 0x30, 0xc8).map(_.toByte)
+    val md = java.security.MessageDigest.getInstance("SHA-1")
+    md.update(namespaceDns)
+    md.update(name.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val b = md.digest()
+    b(6) = ((b(6) & 0x0f) | 0x50).toByte
+    b(8) = ((b(8) & 0x3f) | 0x80).toByte
+    val hex = b.take(16).map(x => f"$x%02x").mkString
+    s"${hex.substring(0, 8)}-${hex.substring(8, 12)}-${hex.substring(12, 16)}-" +
+      s"${hex.substring(16, 20)}-${hex.substring(20, 32)}"
+  }
+
   test("uuid5Jvm matches CPython vectors") {
     vectors.foreach { case (name, expected) =>
       assert(Uuid5.uuid5Jvm(name) == expected, s"for name '$name'")
@@ -42,7 +59,8 @@ class Uuid5Spec extends SparkTestBase {
     val got = names.toDF("name")
       .select(Uuid5.uuid5(col("name"))).as[String].collect()
     names.zip(got).foreach { case (n, u) =>
-      assert(u == Uuid5.uuid5Jvm(n), s"for name '$n'")
+      assert(u == uuid5Reference(n), s"for name '$n'")
+      assert(Uuid5.uuid5Jvm(n) == u, s"uuid5Jvm for name '$n'")
     }
   }
 
@@ -63,7 +81,7 @@ class Uuid5Spec extends SparkTestBase {
 
   test("property: expression equals JVM twin on generated strings") {
     // The codegen path hashes raw UTF8String bytes with no String
-    // round-trip; the twin goes through String.getBytes. Generated
+    // round-trip; the reference goes through String.getBytes. Generated
     // unicode (incl. surrogate pairs), empties, and long inputs pin the
     // two paths byte-identical.
     import org.scalacheck.Gen
@@ -79,7 +97,8 @@ class Uuid5Spec extends SparkTestBase {
     val got = names.toDF("name")
       .select(Uuid5.uuid5(col("name"))).as[String].collect()
     names.zip(got).foreach { case (n, u) =>
-      assert(u == Uuid5.uuid5Jvm(n), s"for name '$n'")
+      assert(u == uuid5Reference(n), s"for name '$n'")
+      assert(Uuid5.uuid5Jvm(n) == u, s"uuid5Jvm for name '$n'")
     }
   }
 
