@@ -289,67 +289,22 @@ object Graph extends QueryGroup {
     import s.implicits._
     org.apache.spark.sql.graft.GraftSqlFunctions.ensure(s)
     val oe = gr.select($"u", explode($"nbrs").as("v"))
-    // Size the closure bloom from the ACTUAL edge count — one cheap scan
-    // of the just-checkpointed blocks. The fixed 4M sizing of rounds ≤11
-    // saturated at the ×100 probe corpus (~150M edges → ~100% false
-    // positives → the full multi-billion-row wedge relation reached the
-    // closure join and spilled the disk dry). A bloom sized for the data
-    // keeps the map-side prune effective at ANY corpus size. The
-    // aggregate is graft's `bloom_agg_exact` — explicit geometry baked
-    // into the plan at construction, NO session conf consulted: the r12
-    // variant had to raise spark.sql.optimizer.runtime.bloomFilter.
-    // maxNumItems/maxNumBits session-wide and never restored them, a
-    // cross-query side effect on any shared session.
-    //
-    // PARTITIONED above `bucketItems` edges (r15; the partitioned-bloom
-    // fallback rounds 12-14 only named in this comment): edges hash into
-    // `nBuckets` key ranges by pmod(xxhash64(u,v), nBuckets), one
-    // bloom_agg_exact scalar subquery per bucket, and wedges probe the
-    // bucket their own hash selects via a CASE over the subqueries —
-    // still entirely map-side (each scalar is computed once and cached
-    // by might_contain, zero wedge bytes moved for the prune). The CASE
-    // shape rather than a map<bucket, bloom> scalar because Spark's
-    // might_contain analyzer only accepts a constant or a DIRECT scalar
-    // subquery as the filter argument — element_at(subquery-map, k) is
-    // a DATATYPE_MISMATCH. Each bucket's bloom holds ~edges/nBuckets
-    // items, so no single bit array ever approaches the sketch
-    // library's Int-indexed bound and the FP rate stays at the designed
-    // 1% at ANY edge count (the single-bloom clamp degraded FP past
-    // ~2.1B edges and sat at a 2.4 GiB monolith well before that). An
-    // empty bucket aggregates to an EMPTY bloom → probe returns false,
-    // which is exact (empty bucket = the wedge's closing edge cannot
-    // exist). Build cost is nBuckets passes over the checkpointed edge
-    // blocks (each with the bucket predicate evaluated scan-side);
-    // total bloom bytes are unchanged by the split. At corpora where
-    // even the summed blooms outgrow broadcast budgets, the knob to
-    // turn is FPP (more FPs only cost extra exact-join probes), never
-    // correctness.
-    // One pass yields the edge count (bucket geometry + transport choice)
-    // AND the snapshot fingerprint the broadcast-transport plan re-checks
-    // per execution (see the EAGER-BUILD CONTRACT above).
+    // The closure bloom is sized from the edge count, read in the same
+    // pass as the snapshot fingerprint the broadcast plan re-checks per
+    // execution (EAGER-BUILD CONTRACT above): capacity = 1.2 x the edges
+    // it holds, floor 65,536 items, FPP 1% (`bloom_agg_exact` bakes the
+    // geometry into the plan; no session conf is consulted). Above
+    // `bucketItems` edges, edges hash into `nBuckets` ranges by
+    // pmod(xxhash64(u, v), nBuckets), one bloom per bucket sized to its
+    // mean fill, so no bit array nears the sketch library's Int-indexed
+    // bound and total bloom bytes do not grow with the split. The bloom
+    // only prefilters wedges; `sorted_contains_long` decides the count.
     val cntFp = oe.agg(count(lit(1)),
       coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
     val edgeRows = cntFp.getLong(0)
     val edgeFingerprint = cntFp.getLong(1)
     val nBuckets = math.max(1L, (edgeRows + bucketItems - 1) / bucketItems).toInt
-    // 20% headroom over the mean bucket fill: xxhash64 spreads edges
-    // near-uniformly, so mean+20% keeps every bucket at-or-under its
-    // designed FP rate without re-counting per bucket. The capacity
-    // floor applies ONLY to the single-bucket plan: under the split the
-    // floor would multiply by bucket count (total bloom bytes growing
-    // ~nBuckets× past the single bloom's, for zero FP benefit), and
-    // because every bucket's bloom builds as a CONCURRENT scalar
-    // subquery whose partial-agg buffer is allocated full-size in every
-    // task, a floored 16-bucket build holds nBuckets × tasks × floorMB
-    // of live bit arrays at once — measured as a heap OOM at the ×10
-    // forced-bucket probe on an 8g driver. Per-bucket capacity scaled
-    // to actual fill keeps total bloom bytes (and peak build memory)
-    // constant under any split; in the production regime (buckets only
-    // above `bucketItems` edges) per-bucket fill is ≥ bucketItems/1.2
-    // anyway, so no floor is ever binding there.
-    val perBucket =
-      if (nBuckets == 1) math.max(4000000L, edgeRows * 6 / 5 + 1)
-      else math.max(65536L, edgeRows / nBuckets * 6 / 5 + 1)
+    val perBucket = math.max(65536L, edgeRows / nBuckets * 6 / 5 + 1)
     // Per-invocation view names: two concurrent triangle runs on one
     // session must not race on create/drop of a shared name
     // (ConcurrencySpec interleaves this query with itself since r13).

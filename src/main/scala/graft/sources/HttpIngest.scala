@@ -245,12 +245,13 @@ object HttpIngest {
     else baseUrl.replaceAll("\\.htm$", s"_IP$page.htm")
 
   /** The distributed scrape: frontier → mapPartitions(fetch result pages →
-    * listing links → dedup → fetch details) → typed rows. */
+    * listing links → dedup → fetch details) → typed rows. One partition
+    * per task, cut by `parallelize`: no exchange and no extra job. */
   def scrape(spark: SparkSession, tasks: Seq[ScrapeTask], fetcher: Fetcher,
       maxPages: Int = 10): Dataset[JobListing] = {
     import spark.implicits._
-    spark.createDataset(tasks)
-      .repartition(math.max(tasks.size, 1))
+    spark.createDataset(
+      spark.sparkContext.parallelize(tasks, math.max(tasks.size, 1)))
       .mapPartitions { it =>
         it.flatMap { task =>
           fetcher.fetch(task.baseUrl).toSeq.flatMap { first =>

@@ -36,6 +36,9 @@ class CheckpointModeSpec extends SparkTestBase {
     // disk blocks are unpersistable the normal way (Bench.quiesce path)
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
+    // disk mode persists through the cache manager: drop its entries too,
+    // or later suites' plans read these relations in place of their own.
+    spark.catalog.clearCache()
   }
 
   test("reliable mode: checkpointed pagerank byte-identical to local") {

@@ -113,9 +113,7 @@ class GraphSpec extends SparkTestBase {
       (nbrs(a) & nbrs(b)).count(c => c > b)
     }.sum.toLong
     // edges.size == the oriented edge count, so size/3 forces >= 3
-    // buckets (capacity scaled to the per-bucket fill since r15 — the
-    // 4M single-bloom floor multiplied across buckets and OOMed the
-    // forced ×10 probe).
+    // buckets, each sized to its own fill.
     val forcedDf = graft.queries.Graph
       .trianglesWithBloomBucketItems(spark, Sf0001,
         bucketItems = math.max(1L, edges.size / 3L))

@@ -94,6 +94,52 @@ class PlanAuditSpec extends SparkTestBase {
           .mkString(", "))
   }
 
+  test("Spark jobs per consume stay at their runtime pins") {
+    // Runtime counterpart of the static budgets: the Spark jobs ONE
+    // consume starts on the suite session (AQE on), plan construction
+    // included (checkpoints, bloom sizing, schema inference), after one
+    // warm consume so JVM-wide memos are filled. The static count cannot
+    // see jobs a query runs while it is built (bpe's per-step merges).
+    // A relation left in the shared cache manager would stand in for
+    // part of these plans, so start from an empty one.
+    import org.apache.spark.sql.functions.{col, expr, xxhash64}
+    spark.catalog.clearCache()
+    val cleanDir = java.nio.file.Files.createTempDirectory("graft_jobs")
+    val rawDir = java.nio.file.Files.createDirectories(cleanDir.resolve("raw"))
+    java.nio.file.Files.writeString(rawDir.resolve(
+      "glassdoor-job-scrapping02-09-2021-data-engineer-london.csv"),
+      PipelineSmoke.RawCsv)
+    graft.pipelines.Clean.run(spark, rawDir.toString)
+      .write.parquet(s"$cleanDir/clean")
+    def build(name: String): org.apache.spark.sql.DataFrame =
+      if (name == "Populate.run")
+        graft.pipelines.Populate.run(
+          spark.read.parquet(s"$cleanDir/clean"), PipelineSmoke.Skills)
+      else SparkEntry.queries(name)(spark, Sf0001)
+    def consume(name: String): Unit = {
+      val df = build(name)
+      df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
+        .agg(expr("bit_xor(h)")).collect()
+    }
+    def quiesce(): Unit = {
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      graft.core.Broadcasts.drain()
+    }
+    try {
+      val observed = PlanAuditSpec.jobPins.keys.toSeq.sorted.map { name =>
+        consume(name); quiesce()
+        val jobs = countJobs(consume(name))._2
+        quiesce()
+        name -> jobs
+      }
+      val off = observed.filter { case (n, j) => j != PlanAuditSpec.jobPins(n) }
+      assert(off.isEmpty, "Spark jobs per consume moved off their pins: " +
+        off.map { case (n, j) => s"$n: $j (pinned ${PlanAuditSpec.jobPins(n)})" }
+          .mkString(", "))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(cleanDir.toFile)
+  }
+
   test("linkpred keeps its generator-wedge join-free plan") {
     // q_graph_linkpred is the catalog's most expensive query and its
     // plan is load-bearing (r19 lp3 rewrite, A/B 0.64×/0.74×): ONE
@@ -261,6 +307,24 @@ class PlanAuditSpec extends SparkTestBase {
   * every query whose observed count differs from its budget; review the
   * diff before editing — every increase must be justified. */
 object PlanAuditSpec {
+  /** Spark jobs of one warm consume at sf0.001 (`local[4]`, 4 shuffle
+    * partitions, AQE on): the perfbench `catalog_mix` rows, the serving
+    * rows, the populate stage over a clean parquet table, and the two
+    * bpe rows whose merges run while the plan is built. A change in
+    * either direction fails; a drop is a win to record here. */
+  val jobPins: Map[String, Int] = Map(
+    "q_graph_triangles" -> 13,
+    "q_dedup_jaccard" -> 8,
+    "q_join_star" -> 7,
+    "q_text_top_skills" -> 5,
+    "q_serving_jobs" -> 3,
+    "q_serving_pivot" -> 5,
+    "q_serving_lookup" -> 5,
+    "q_serving_join" -> 7,
+    "q_text_bpe" -> 21,
+    "q_text_bpe_deep" -> 40,
+    "Populate.run" -> 6)
+
   val baseline: Map[String, Int] = Map(
     "q_agg_collect_sorted" -> 2,
     // r15: same decomposition as q_agg_rollup (pre-agg exchange + the
@@ -674,11 +738,11 @@ object PlanAuditSpec {
     "q_text_chunk" -> 1,
     // 1: count shuffle only — orderBy+limit plans TakeOrderedAndProject
     "q_text_vocab" -> 1,
-    // word-vocab groupBy + 3x(pair-count agg + 1-row argmax/stats) + the
-    // 3-row output sort; every post-vocab relation is vocab-sized.
-    "q_text_bpe" -> 3, // tightened r13: per-step materialization
-    // derived budget: 31 word types at the audit SF -> bpeMergeBudget = 7.
-    "q_text_bpe_deep" -> 7,
+    // The word vocab and every batched merge round run as jobs while the
+    // plan is built, so the returned plan holds only the output sort;
+    // `jobPins` pins the jobs the merges run.
+    "q_text_bpe" -> 1,
+    "q_text_bpe_deep" -> 1,
     "q_text_fingerprint" -> 1,
     "q_text_langid" -> 1,
     // unigram agg + bigram agg + top-K sort; unigram side broadcasts.

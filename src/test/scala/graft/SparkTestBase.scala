@@ -34,6 +34,26 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       .foreach(t => spark.catalog.dropTempView(t.name))
   }
 
+  /** Runs `body` and returns its result with the number of Spark jobs
+    * started meanwhile: a listener counts job starts, with the listener
+    * bus drained before it is added and before it is read. */
+  def countJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(counter)
+  }
+
   override protected def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("ERROR")
