@@ -70,9 +70,13 @@ object Bench {
     * isolated on identical code). Blocking unpersist + two GC passes with
     * a short pause let the cleaner's reference queue drain before the next
     * timer starts. */
-  private def quiesce(spark: SparkSession): Unit = {
+  private[graft] def quiesce(spark: SparkSession): Unit = {
     val sc = spark.sparkContext
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    // `disk`-mode Checkpoints persist through the shared cache manager:
+    // its entries outlive their unpersisted RDDs, and later plans holding
+    // the same fragment would recompute it inside their own job.
+    spark.catalog.clearCache()
     // Driver-created broadcasts (the partitioned triangle blooms) are only
     // reclaimed once GC proves the stub dead; destroy the tracked ones
     // eagerly so repeated runs can't accumulate executor-resident copies.

@@ -4,6 +4,8 @@ import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, NoSuchFileException, Paths, StandardOpenOption}
 
+import scala.collection.mutable
+
 import graft.pipelines.Populate
 
 /** Durable file-backed key-value store — the offline stand-in for the
@@ -16,8 +18,10 @@ import graft.pipelines.Populate
   * instance appends `key \t value` lines (URL-encoded, so tabs/newlines in
   * data round-trip) to its OWN file, named
   * `log-<createMillis>-<uuid>.tsv` — executor tasks never contend on a
-  * shared file or lock. Readers replay every log file in filename order
-  * (creation-time prefix) and keep the last write per key.
+  * shared file or lock. Readers replay the complete lines of every log
+  * file in filename order (creation-time prefix) and keep the last write
+  * per key: [[FileKvStore.read]] once, a long-lived
+  * [[FileKvStore.Reader]] again only when the listing changed.
   *
   * Semantics and limits (deliberate, documented):
   *  - Idempotent upserts: replaying a micro-batch rewrites the same keys
@@ -46,7 +50,6 @@ final class FileKvStore(dir: String) extends Serializable {
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
-
   /** Adapter to the populate-stage sink: keys rows by `keyCol`, serializes
     * the remaining columns as sorted `k=v` pairs (the wide published row,
     * `populator.py:47-58` item shape). */
@@ -57,12 +60,6 @@ final class FileKvStore(dir: String) extends Serializable {
           s"${FileKvStore.pairEnc(k)}=${FileKvStore.pairEnc(v)}"
         }.mkString(","))
   }
-
-  /** Merged read of everything under `dir` — same view a freshly started
-    * JVM gets. */
-  def snapshot(): Map[String, String] = FileKvStore.read(dir)
-
-  def get(key: String): Option[String] = snapshot().get(key)
 }
 
 object FileKvStore {
@@ -124,31 +121,69 @@ object FileKvStore {
       .filter(f => f.getName.startsWith("log-") && f.getName.endsWith(".tsv"))
       .sortBy(_.getName)
 
-  /** Replays `files` in order; last write per key wins. Throws
-    * `NoSuchFileException` when a file was deleted after it was listed. */
+  /** Merged view of a store directory; last write per key wins, in
+    * filename order.
+    *
+    * Each [[current]] call lists the directory again, so a call that
+    * starts after a write or segment commit finished sees it. When the
+    * listed (name, size) pairs equal the last call's, it opens no file and
+    * returns the same view instance, so callers may cache what they derive
+    * from it; any other listing replays every segment. A segment that
+    * [[compact]] deleted after the listing starts the call over from a new
+    * listing; the merged segment is committed before any delete, so that
+    * listing holds the same view. Calls on one reader serialize. */
+  final class Reader(dir: String) {
+    private var listed = Seq.empty[(String, Long)]
+    private var view = Map.empty[String, String]
+
+    def current(): Map[String, String] = synchronized {
+      try {
+        val files = logFiles(dir)
+        // Files.size, not File.length: a deleted segment must throw, not
+        // read as empty.
+        val now = files.map(f => (f.getName, Files.size(f.toPath)))
+        if (now != listed) {
+          view = replay(files)
+          listed = now
+        }
+        view
+      } catch { case _: NoSuchFileException => current() }
+    }
+  }
+
+  /** Replays `files` in order; last write per key wins. Only `\n`-ended
+    * lines apply: a line still being appended, or torn by a crashed
+    * writer, is not served. Throws `NoSuchFileException` when a file was
+    * deleted after it was listed. */
   private def replay(files: Seq[File]): Map[String, String] = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val m = mutable.HashMap.empty[String, String]
     files.foreach { f =>
-      Files.readAllLines(f.toPath).forEach { line =>
-        val i = line.indexOf('\t')
-        if (i > 0) m.put(dec(line.substring(0, i)), dec(line.substring(i + 1)))
+      val bytes = Files.readAllBytes(f.toPath)
+      var start = 0
+      var i = 0
+      while (i < bytes.length) {
+        if (bytes(i) == '\n') {
+          var tab = start
+          while (tab < i && bytes(tab) != '\t') tab += 1
+          if (tab > start && tab < i)
+            m.put(dec(new String(bytes, start, tab - start, UTF_8)),
+              dec(new String(bytes, tab + 1, i - tab - 1, UTF_8)))
+          start = i + 1
+        }
+        i += 1
       }
     }
     m.toMap
   }
 
-  /** Replay all logs in creation order; last write per key wins. When
-    * [[compact]] deletes a listed segment before this replay opens it, the
-    * replay starts over from a fresh listing: the merged segment is
-    * committed before any delete, so the new listing holds the same view. */
-  def read(dir: String): Map[String, String] =
-    try replay(logFiles(dir))
-    catch { case _: NoSuchFileException => read(dir) }
+  /** Full replay of `dir`: the view a freshly started JVM gets. */
+  def read(dir: String): Map[String, String] = new Reader(dir).current()
 
   /** Rewrite the merged view as one segment (one [[SegmentWriter]]: one
     * open, then an atomic rename) and drop the replayed files. Safe under
     * concurrent [[read]]s; call only with no active writers (e.g. between
-    * streaming runs, or from the one writer thread). */
+    * streaming runs, or from the one writer thread). A torn trailing line
+    * of a crashed writer is not carried over. */
   def compact(dir: String): Unit = {
     val old = logFiles(dir)
     if (old.nonEmpty) {

@@ -20,7 +20,7 @@ import graft.sources.FileKvStore
   * `index.py:16-25`): `spark.read.format("graftkv")` /
   * `df.write.format("graftkv").mode("append")` against the same durable
   * log directory `FileKvStore.rowSink` writes, instead of driver-side
-  * `snapshot()` calls.
+  * `FileKvStore.read` calls.
   *
   * Read path: TableProvider → ScanBuilder with FILTER PUSHDOWN — key
   * equality / IN / prefix predicates are claimed by the source

@@ -33,12 +33,17 @@ class CheckpointModeSpec extends SparkTestBase {
       Seq("q_graph_triangles", "q_dedup_cluster").map(rows)
     }
     assert(disk == local, "disk checkpoint mode changed query results")
-    // disk blocks are unpersistable the normal way (Bench.quiesce path)
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    // disk mode persists through the cache manager: drop its entries too,
-    // or later suites' plans read these relations in place of their own.
-    spark.catalog.clearCache()
+    // Drop the disk blocks and their cache-manager entries, or later
+    // suites' plans read these relations in place of their own.
+    Bench.quiesce(spark)
+  }
+
+  test("Bench.quiesce leaves no disk-mode entry in the cache manager") {
+    withMode("disk") { rows("q_graph_triangles") }
+    assert(!spark.sharedState.cacheManager.isEmpty,
+      "disk mode should persist through the cache manager")
+    Bench.quiesce(spark)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("reliable mode: checkpointed pagerank byte-identical to local") {

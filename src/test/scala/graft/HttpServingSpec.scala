@@ -4,6 +4,10 @@ import java.io.File
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import graft.pipelines.{Clean, Populate}
 import graft.sources.{FileKvStore, SkillsHttpServer}
@@ -23,8 +27,9 @@ class HttpServingSpec extends SparkTestBase {
     d
   }
 
-  private def get(port: Int, path: String): (Int, String) = {
-    val resp = HttpClient.newHttpClient().send(
+  private def get(port: Int, path: String,
+      http: HttpClient = HttpClient.newHttpClient()): (Int, String) = {
+    val resp = http.send(
       HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
         .GET().build(),
       HttpResponse.BodyHandlers.ofString())
@@ -157,6 +162,75 @@ class HttpServingSpec extends SparkTestBase {
           .POST(HttpRequest.BodyPublishers.noBody()).build(),
         HttpResponse.BodyHandlers.ofString())
       assert(resp.statusCode() == 405)
+    }
+  }
+
+  test("GETs racing republish + compact never see an older generation") {
+    val dir = freshDir("race")
+    val keys = (0 until 200).map(i => s"k$i")
+    def publish(g: Int): Unit = {
+      val sink = new FileKvStore(dir).rowSink("job_id")
+      keys.foreach(k => sink.put(Map("job_id" -> k, "job" -> s"g$g")))
+    }
+    publish(0)
+    @volatile var committed = 0
+    @volatile var done = false
+    val errors = new ConcurrentLinkedQueue[String]
+    val requests = new AtomicInteger
+    val Gen = """"job": "g(\d+)"""".r
+    withServer(dir) { srv =>
+      val clients = (0 until 3).map { c =>
+        new Thread(() =>
+          try {
+            val rng = new scala.util.Random(c)
+            val http = HttpClient.newHttpClient()
+            while (!done) {
+              val lo = committed
+              if (requests.incrementAndGet() % 10 == 0) {
+                val (code, body) = get(srv.port, "/skills", http)
+                val listed = "\"job_id\"".r.findAllMatchIn(body).size
+                if (code != 200 || listed != keys.size)
+                  errors.add(s"scan: status $code, $listed rows")
+              } else {
+                val k = keys(rng.nextInt(keys.size))
+                val (code, body) = get(srv.port, s"/skills/$k", http)
+                val gen = Gen.findFirstMatchIn(body).map(_.group(1).toInt)
+                if (code != 200) errors.add(s"$k: status $code")
+                else if (!gen.exists(_ >= lo))
+                  errors.add(s"$k: $body, sent after g$lo committed")
+              }
+            }
+          } catch { case t: Throwable => errors.add(t.toString) })
+      }
+      clients.foreach(_.start())
+      // The one writer; each publish and compaction starts in a later
+      // millisecond, since segment order is millisecond-granular.
+      try (1 to 30).foreach { g =>
+        Thread.sleep(2); publish(g); committed = g
+        if (g % 5 == 0) { Thread.sleep(2); FileKvStore.compact(dir) }
+      } finally { done = true; clients.foreach(_.join()) }
+    }
+    assert(errors.isEmpty, errors.asScala.take(5).mkString("; "))
+    assert(requests.get > 30)
+  }
+
+  test("30 sequential small GETs: p50 under 20 ms") {
+    val dir = freshDir("latency")
+    new FileKvStore(dir).upsert("k1", "job=x")
+    withServer(dir) { srv =>
+      val http = HttpClient.newBuilder()
+        .version(HttpClient.Version.HTTP_1_1).build()
+      val req = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${srv.port}/skills/k1")).GET().build()
+      def timedMs(): Double = {
+        val t0 = System.nanoTime()
+        assert(http.send(req, HttpResponse.BodyHandlers.ofString())
+          .statusCode() == 200)
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 3).foreach(_ => timedMs()) // connect, load classes
+      val ms = IndexedSeq.fill(30)(timedMs()).sorted
+      assert(ms(15) < 20, s"p50 ${ms(15)} ms; sorted: ${ms.mkString(", ")}")
     }
   }
 }
