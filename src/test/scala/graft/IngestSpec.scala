@@ -165,6 +165,74 @@ class IngestSpec extends SparkTestBase {
       Set("£30000 - £40000 (Employer Est.)", "$25 Per Hour"))
   }
 
+  /** `n` canned (term, location) tasks, each with its own listings over
+    * two result pages; task i has i + 2 listings, and every detail URL
+    * names its task as `src=s<i>`, like the daily run's corpus. */
+  private def corpus(n: Int): (Seq[ScrapeTask], Fetcher) = {
+    val pages = (0 until n).flatMap { i =>
+      val base = s"http://t/S$i.htm"
+      val links = (0 until i + 2).map(j => s"/partner/jobListing.htm?src=s$i&jl=$j")
+      def resultPage(p: Int, ls: Seq[String]): String =
+        s"<p>${links.size} Jobs</p><p>Page $p of 2</p>" + ls.map(l =>
+          s"""<li><a href="$l">x</a><span data-test="detailSalary">£$i</span></li>"""
+        ).mkString
+      val (first, second) = links.splitAt(links.size / 2)
+      Seq(base -> resultPage(1, first), pageUrl(base, 2) -> resultPage(2, second)) ++
+        links.map(l => l ->
+          s"""<span data-test="employerName">c$i</span><li>description of $l</li>""")
+    }.toMap
+    ((0 until n).map(i => ScrapeTask(s"term$i", s"loc$i", s"http://t/S$i.htm")),
+      new MapFetcher(pages))
+  }
+
+  test("multi-task scrape: one partition per slot, a contiguous slice each") {
+    val (tasks, f) = corpus(7)
+    assert(spark.sparkContext.defaultParallelism == 4)
+    for ((n, parts) <- Seq(0 -> 1, 1 -> 1, 2 -> 2, 7 -> 4))
+      assert(HttpIngest.scrape(spark, tasks.take(n), f).rdd.getNumPartitions == parts,
+        s"$n tasks")
+    val placed = HttpIngest.scrape(spark, tasks, f).rdd
+      .mapPartitionsWithIndex((p, it) => it.map(l => (l, p))).collect().toSeq
+    val partOf = placed
+      .groupBy(_._1.requested_url.get.split("src=s")(1).takeWhile(_ != '&').toInt)
+      .map { case (i, ps) =>
+        assert(ps.map(_._2).distinct.length == 1, s"task $i spans partitions")
+        i -> ps.head._2
+      }
+    assert(partOf.keys.toSeq.sorted == (0 until 7))
+    assert((0 until 7).map(partOf) == (0 until 7).map(partOf).sorted) // contiguous
+    val together = placed.map(_._1)
+    val alone = tasks.flatMap(t => HttpIngest.scrape(spark, Seq(t), f).collect())
+    assert(together.size == (0 until 7).map(_ + 2).sum)
+    assert(together.groupBy(identity).view.mapValues(_.size).toMap ==
+      alone.groupBy(identity).view.mapValues(_.size).toMap)
+  }
+
+  test("hand-off: partitionBy(src) writes one part file per (term, location) " +
+      "in 1 job of min(tasks, slots) tasks") {
+    import org.apache.spark.sql.functions.{col, regexp_extract}
+    val (tasks, f) = corpus(7)
+    val tmp = java.nio.file.Files.createTempDirectory("ingest-handoff").toFile
+    try {
+      val out = new java.io.File(tmp, "raw")
+      val (_, jobs, taskRuns) = countJobsAndTasks {
+        HttpIngest.scrape(spark, tasks, f).toDF()
+          .withColumn("__src", regexp_extract(col("requested_url"), "src=([^&]+)", 1))
+          .write.partitionBy("__src").option("header", "true").csv(out.getPath)
+      }
+      assert((jobs, taskRuns) == ((1, 4)))
+      val dirs = out.listFiles().filter(_.getName.startsWith("__src=")).sortBy(_.getName)
+      assert(dirs.map(_.getName).toSeq == (0 until 7).map(i => s"__src=s$i"))
+      dirs.zipWithIndex.foreach { case (d, i) =>
+        val parts = d.listFiles().filter(_.getName.endsWith(".csv"))
+        assert(parts.length == 1, d.getName)
+        // header + one line per listing of task i
+        assert(java.nio.file.Files.readAllLines(parts.head.toPath).size == i + 3,
+          d.getName)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+  }
+
   test("pageUrl rewrite (main.py:49-58 semantics)") {
     assert(pageUrl("http://t/S.htm", 1) == "http://t/S.htm")
     assert(pageUrl("http://t/S.htm", 3) == "http://t/S_IP3.htm")

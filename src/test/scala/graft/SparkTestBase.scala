@@ -35,22 +35,34 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Runs `body` and returns its result with the number of Spark jobs
-    * started meanwhile: a listener counts job starts, with the listener
-    * bus drained before it is added and before it is read. */
+    * started meanwhile. */
   def countJobs[A](body: => A): (A, Int) = {
+    val (out, jobs, _) = countJobsAndTasks(body)
+    (out, jobs)
+  }
+
+  /** Runs `body` and returns its result with the number of Spark jobs
+    * started and task attempts ended meanwhile: a listener counts them,
+    * with the listener bus drained before it is added and before it is
+    * read. */
+  def countJobsAndTasks[A](body: => A): (A, Int, Int) = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
     val counter = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet()
     }
     org.apache.spark.ListenerBusDrain.drain(sc)
     sc.addSparkListener(counter)
     try {
       val out = body
       org.apache.spark.ListenerBusDrain.drain(sc)
-      (out, jobs.get)
+      (out, jobs.get, tasks.get)
     } finally sc.removeSparkListener(counter)
   }
 
