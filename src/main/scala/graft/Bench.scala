@@ -61,26 +61,16 @@ object Bench {
   }
 
   /** Release every block the previous query left behind, OUTSIDE any timed
-    * window. The iterative queries (graph, cluster, keep-best) leave eager
-    * localCheckpoint blocks; their broadcasts and shuffle files are freed
-    * by ContextCleaner only after a JVM GC proves the references dead, and
-    * the cleaner works asynchronously — with a bare System.gc() between
-    * queries, state piled up across a sweep and inflated checkpoint-heavy
-    * queries up to 3x (q_graph_pagerank 11.0 s in-sweep vs 3.40 s
-    * isolated on identical code). Blocking unpersist + two GC passes with
-    * a short pause let the cleaner's reference queue drain before the next
-    * timer starts. */
+    * window: [[graft.core.Sessions.release]], then two GC passes with a
+    * short pause. The iterative queries' broadcasts and shuffle files are
+    * freed by ContextCleaner only after a JVM GC proves the references
+    * dead, and the cleaner works asynchronously — with a bare System.gc()
+    * between queries, state piled up across a sweep and inflated
+    * checkpoint-heavy queries up to 3x (q_graph_pagerank 11.0 s in-sweep
+    * vs 3.40 s isolated on identical code). The pause lets the cleaner's
+    * reference queue drain before the next timer starts. */
   private[graft] def quiesce(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    // `disk`-mode Checkpoints persist through the shared cache manager:
-    // its entries outlive their unpersisted RDDs, and later plans holding
-    // the same fragment would recompute it inside their own job.
-    spark.catalog.clearCache()
-    // Driver-created broadcasts (the partitioned triangle blooms) are only
-    // reclaimed once GC proves the stub dead; destroy the tracked ones
-    // eagerly so repeated runs can't accumulate executor-resident copies.
-    graft.core.Broadcasts.drain()
+    graft.core.Sessions.release(spark)
     System.gc(); Thread.sleep(120)
     System.gc(); Thread.sleep(60)
   }
@@ -289,24 +279,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // The codegen class cache defaults to 100 entries; this catalog
-      // compiles several hundred distinct codegen units per pass, so at
-      // the default every warmup+timed pass evicts and RE-COMPILES a
-      // random subset (Janino compiles cost 1-5 s) — which showed up as
-      // bimodal per-query medians (e.g. q_text_pmi 0.5 s vs 3 s across
-      // otherwise identical runs). Static conf: must be set before the
-      // session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
     val catalog = SparkEntry.queries
 
     // Filtered mode: SPARK_GRAFT_BENCH_ONLY is a comma-separated name

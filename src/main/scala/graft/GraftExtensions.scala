@@ -14,8 +14,8 @@ import org.apache.spark.sql.graft.GraftSqlFunctions
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
-  * or programmatically:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * or programmatically through [[graft.core.Sessions.local]], which also
+  * sets the conf the oracle gate runs under.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

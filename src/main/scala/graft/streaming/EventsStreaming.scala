@@ -404,17 +404,12 @@ object EventsStreaming {
     * [[graft.pipelines.Populate.writeTo]] into `sink`, one row per put. A
     * composite store key is a column the caller builds (e.g. `concat_ws`).
     * Complete-mode re-emission keeps the store converged, and `RowSink`
-    * puts are idempotent on key, so a replayed batch is harmless. Pass
-    * `Trigger.AvailableNow()` for the reference's drain-the-drop-folder
-    * batch cadence. */
-  def foreachBatchUpsert(agg: DataFrame, sink: Populate.RowSink,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = agg.writeStream
+    * puts are idempotent on key, so a replayed batch is harmless. */
+  def foreachBatchUpsert(agg: DataFrame, sink: Populate.RowSink)(
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    agg.writeStream
       .outputMode(OutputMode.Complete)
       .option("checkpointLocation", checkpoint)
-    trigger.foreach(w.trigger)
-    w.foreachBatch((batch: DataFrame, _: Long) => Populate.writeTo(batch, sink))
+      .foreachBatch((batch: DataFrame, _: Long) => Populate.writeTo(batch, sink))
       .start()
-  }
 }

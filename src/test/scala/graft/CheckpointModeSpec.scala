@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, Sessions}
 
 /** The `graft.checkpoint.mode` session flag (core/Checkpoints.scala):
   * `local` (default, eager localCheckpoint — lineage truncated, the
@@ -35,14 +35,14 @@ class CheckpointModeSpec extends SparkTestBase {
     assert(disk == local, "disk checkpoint mode changed query results")
     // Drop the disk blocks and their cache-manager entries, or later
     // suites' plans read these relations in place of their own.
-    Bench.quiesce(spark)
+    Sessions.release(spark)
   }
 
-  test("Bench.quiesce leaves no disk-mode entry in the cache manager") {
+  test("Sessions.release leaves no disk-mode entry in the cache manager") {
     withMode("disk") { rows("q_graph_triangles") }
     assert(!spark.sharedState.cacheManager.isEmpty,
       "disk mode should persist through the cache manager")
-    Bench.quiesce(spark)
+    Sessions.release(spark)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 

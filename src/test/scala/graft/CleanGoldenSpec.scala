@@ -15,7 +15,7 @@ class CleanGoldenSpec extends SparkTestBase {
       Paths.get("target/tmp/graft_raw")).toString
     Files.writeString(
       Paths.get(s"$dir/glassdoor-job-scrapping02-09-2021-data-engineer-london.csv"),
-      PipelineSmoke.RawCsv)
+      PipelineFixtures.RawCsv)
     dir
   }
 
@@ -66,7 +66,7 @@ class CleanGoldenSpec extends SparkTestBase {
   }
 
   test("populate: top skills + uuid5 + pivot golden") {
-    val pub = Populate.run(clean, PipelineSmoke.Skills).collect()
+    val pub = Populate.run(clean, PipelineFixtures.Skills).collect()
     assert(pub.length == 1)
     val row = pub.head
     assert(row.getAs[String]("job_id") ==
@@ -121,7 +121,7 @@ class CleanGoldenSpec extends SparkTestBase {
   }
 
   test("serving: Q2 lookup unpacks ranked skills") {
-    val pub = Populate.run(clean, PipelineSmoke.Skills)
+    val pub = Populate.run(clean, PipelineFixtures.Skills)
     val skills = Populate
       .lookupSkills(pub, "b6d8eec2-da41-59fb-9226-721ead4fde6e")
       .orderBy("rank").collect().map(_.getAs[String]("skill"))

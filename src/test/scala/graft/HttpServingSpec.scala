@@ -76,9 +76,9 @@ class HttpServingSpec extends SparkTestBase {
     Files.createDirectories(Paths.get(rawDir))
     Files.writeString(
       Paths.get(s"$rawDir/glassdoor-job-scrapping02-09-2021-data-engineer-london.csv"),
-      PipelineSmoke.RawCsv)
+      PipelineFixtures.RawCsv)
     val clean = Clean.run(spark, rawDir)
-    val published = Populate.run(clean, PipelineSmoke.Skills)
+    val published = Populate.run(clean, PipelineFixtures.Skills)
     Populate.writeTo(published, new FileKvStore(dir).rowSink("job_id"))
 
     val rows = published.collect()

@@ -22,7 +22,7 @@ class ObserveSpec extends SparkTestBase {
       Paths.get("target/tmp/graft_raw_observe")).toString
     Files.writeString(
       Paths.get(s"$dir/glassdoor-job-scrapping02-09-2021-data-engineer-london.csv"),
-      PipelineSmoke.RawCsv)
+      PipelineFixtures.RawCsv)
     dir
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
@@ -19,16 +18,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   */
 object PlanAuditDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .appName("plan-audit-dump")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local(4, "spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     val sf0001 = "/root/testdata/sf0.001"
     def plan(name: String, d: String) =

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.window.WindowExec
   * Planning-only (never executes a query): for every `SparkEntry.queries`
   * entry at sf0.001 it inspects the fully-prepared static physical plan
   * (`executedPlan` with AQE off) plus all subquery plans and asserts the
-  * invariants the round-2..5 plan audits established by hand:
+  * these plan invariants:
   *
   *  1. no `CartesianProductExec` anywhere except the one deliberate cross
   *     join (`q_join_cross`);
@@ -19,7 +19,7 @@ import org.apache.spark.sql.execution.window.WindowExec
   *  3. each query's shuffle-exchange count stays at or below the audited
   *     baseline snapshot, so a broadcast join silently degrading to a
   *     shuffle join (or a new redundant repartition) fails `sbt test`
-  *     instead of surfacing as a bench regression three rounds later.
+  *     instead of surfacing later as a bench regression.
   *
   * New catalog entries fail with the observed count in the message — add
   * the audited number to `shuffleBudget` after eyeballing the plan.
@@ -101,36 +101,30 @@ class PlanAuditSpec extends SparkTestBase {
     // warm consume so JVM-wide memos are filled. The static count cannot
     // see jobs a query runs while it is built (bpe's per-step merges).
     // A relation left in the shared cache manager would stand in for
-    // part of these plans, so start from an empty one.
+    // part of these plans, so each counted consume follows a release.
     import org.apache.spark.sql.functions.{col, expr, xxhash64}
-    spark.catalog.clearCache()
     val cleanDir = java.nio.file.Files.createTempDirectory("graft_jobs")
     val rawDir = java.nio.file.Files.createDirectories(cleanDir.resolve("raw"))
     java.nio.file.Files.writeString(rawDir.resolve(
       "glassdoor-job-scrapping02-09-2021-data-engineer-london.csv"),
-      PipelineSmoke.RawCsv)
+      PipelineFixtures.RawCsv)
     graft.pipelines.Clean.run(spark, rawDir.toString)
       .write.parquet(s"$cleanDir/clean")
     def build(name: String): org.apache.spark.sql.DataFrame =
       if (name == "Populate.run")
         graft.pipelines.Populate.run(
-          spark.read.parquet(s"$cleanDir/clean"), PipelineSmoke.Skills)
+          spark.read.parquet(s"$cleanDir/clean"), PipelineFixtures.Skills)
       else SparkEntry.queries(name)(spark, Sf0001)
     def consume(name: String): Unit = {
       val df = build(name)
       df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
         .agg(expr("bit_xor(h)")).collect()
     }
-    def quiesce(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      graft.core.Broadcasts.drain()
-    }
     try {
       val observed = PlanAuditSpec.jobPins.keys.toSeq.sorted.map { name =>
-        consume(name); quiesce()
+        consume(name); graft.core.Sessions.release(spark)
         val jobs = countJobs(consume(name))._2
-        quiesce()
+        graft.core.Sessions.release(spark)
         name -> jobs
       }
       val off = observed.filter { case (n, j) => j != PlanAuditSpec.jobPins(n) }
@@ -142,7 +136,7 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("linkpred keeps its generator-wedge join-free plan") {
     // q_graph_linkpred is the catalog's most expensive query and its
-    // plan is load-bearing (r19 lp3 rewrite, A/B 0.64×/0.74×): ONE
+    // plan is load-bearing (A/B 0.64×/0.74× against the join plan): ONE
     // symAdjacency checkpoint feeds everything — wedges are a
     // posexplode + slice-tail-explode GENERATOR chain off the capped
     // array (no wedge self-join exists to demote to a sort), and the
@@ -177,7 +171,7 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("MG hot-key derivation has no global sort and one tiny exchange") {
     // q_join_skew_hot seeds its salt list via MisraGries.topKeys — the
-    // whole point (r17 verdict item 4) is that the derivation is one
+    // whole point is that the derivation is one
     // map-side pass: a per-partition c-entry fold, a single-partition
     // exchange carrying one small map per task, and NO SortExec (the
     // old groupBy-count + orderBy(desc) + limit derivation shipped the
@@ -327,7 +321,7 @@ object PlanAuditSpec {
 
   val baseline: Map[String, Int] = Map(
     "q_agg_collect_sorted" -> 2,
-    // r15: same decomposition as q_agg_rollup (pre-agg exchange + the
+    // same decomposition as q_agg_rollup (pre-agg exchange + the
     // CUBE Expand over the collapsed relation + output sort).
     "q_agg_cube" -> 3,
     "q_agg_distinct" -> 3,
@@ -342,7 +336,7 @@ object PlanAuditSpec {
     "q_agg_median_disc" -> 2,
     // ONE l_returnflag exchange shared by the cumsum + total windows +
     // the 3-row output sort; the crossing predicate is row-local.
-    // r12: collapse + two-phase bucketed prefix sum replaced the single
+    // collapse + two-phase bucketed prefix sum replaced the single
     // per-flag window (3 single-task spilling sorts at x100, exponent
     // 1.24 -> 0.22/decade). The exchanges are the collapse agg, the
     // bucket-subtotal agg + tiny prefix window, the (flag, bucket)
@@ -352,7 +346,7 @@ object PlanAuditSpec {
     // name alignment is a projection, not a shuffle.
     "q_union_byname" -> 2,
     "q_agg_pricing" -> 2,
-    // r15 finest-grain-first decomposition: +1 exchange for the
+    // finest-grain-first decomposition: +1 exchange for the
     // (rf, ls) pre-aggregation, but the Expand + rollup agg now runs
     // over ~6 rows instead of 3x the fact table (1.07 s -> 0.60 s).
     "q_agg_rollup" -> 3,
@@ -368,9 +362,9 @@ object PlanAuditSpec {
     // membership-join/summary aggs. Skinny (query, neighbor) pairs on
     // every exchange; |queries| is a constant.
     "q_ann_recall" -> 6,
-    // r11 split: sketch agg + two-phase exact-distinct + envelope —
+    // split: sketch agg + two-phase exact-distinct + envelope —
     // three fast-path legs instead of one sort-based fallback over
-    // Expand-doubled input. r15: the envelope became the same two-phase
+    // Expand-doubled input. The envelope is the same two-phase
     // rank selection as q_quantile_global (bin histogram agg + tiny
     // bin-cumulative window + per-flag totals agg + hit-bin row window
     // + final envelope agg), trading 3 more skinny exchanges for not
@@ -418,7 +412,7 @@ object PlanAuditSpec {
     // doc-pos window, gram-occurrence agg, dup semi-join, island/span
     // regroup + output sort — only (doc, pos, hash) triples shuffle.
     "q_text_dupspans" -> 4,
-    "q_dropdup_bykey" -> 2, // r11: contract gate (key-dedup + global count distinct)
+    "q_dropdup_bykey" -> 2, // contract gate (key-dedup + global count distinct)
     // one (label,pos) partial-agg exchange + the output sort
     "q_embed_centroid" -> 2,
     // row-local JL projection: the only exchange is the output sort.
@@ -520,7 +514,7 @@ object PlanAuditSpec {
     "q_filename_column" -> 2,
     "q_filter_in_like" -> 1,
     "q_filter_project" -> 1,
-    // r15: finest-grain pre-agg CTE + GROUPING SETS over the collapsed
+    // finest-grain pre-agg CTE + GROUPING SETS over the collapsed
     // relation + output sort (was Expand x3 over lineitem at 2).
     "q_grouping_sets" -> 3,
     "q_histogram" -> 2,
@@ -550,7 +544,7 @@ object PlanAuditSpec {
     "q_join_interval" -> 1,
     // registry side broadcasts into the block join; the per-rid resolve
     // window + output sort share nothing (different keys) = 2.
-    "q_link_jarowinkler" -> 3, // +1: per-block cap window (r13)
+    "q_link_jarowinkler" -> 3, // +1: per-block cap window
     // 4: salted shuffle-hash join shuffles both sides on (key,salt), then
     // the nationkey agg + final sort — the deliberately-shuffled path the
     // salt exists for (broadcast would hide the operator under test).
@@ -621,7 +615,7 @@ object PlanAuditSpec {
     // array broadcast) + output sort; scoring is row-local codegen, the
     // corpus never shuffles.
     "q_quality_classifier" -> 2,
-    // 4 (r18): the bin histogram is checkpointed once (its three
+    // 4: the bin histogram is checkpointed once (its three
     // consumers re-ran the binning agg before), so the selection core
     // keeps the checkpoint's agg pair + the hit-bin window exchange +
     // output sort.
@@ -644,10 +638,10 @@ object PlanAuditSpec {
     // reuse; same sketch-or-pair-only wire property as q_sketch_hll.
     "q_sketch_incremental" -> 6,
     // the selection-core exchanges (shared shape with q_quantile_global,
-    // 4 after the r18 bin-histogram checkpoint) + the bucket agg + output
+    // 4 with the bin-histogram checkpoint) + the bucket agg + output
     // sort; every post-scan exchange carries bin/bucket relations bounded
     // by the domain, never rows. Bucket assignment is a codegen
-    // comparison sum (r18), not a per-row interpreted HOF.
+    // comparison sum, not a per-row interpreted HOF.
     "q_histogram_equidepth" -> 6,
     // (day,type) agg + type baseline + corpus total + per-day totals +
     // the per-day fold + output sort — all domain-bounded relations.
@@ -772,21 +766,21 @@ object PlanAuditSpec {
     "q_vector_topk" -> 2,
     // one n_name partial agg of 6-number moment states + output sort —
     // the whole corr/cov derivation is post-agg scalar arithmetic.
-    // r16: +1 for the finest-grain per-supplier int64 moment pre-agg —
+    // +1 for the finest-grain per-supplier int64 moment pre-agg —
     // the added exchange moves ~1 narrow row per supplier (60× fewer
     // rows than lineitem under TPC-H scaling) and removes the
     // DECIMAL(38,0) BigInteger buffer round-trip from the per-lineitem
     // hot path (isolated median 1.05 → 0.70 s at sf0.1).
     "q_agg_corr" -> 3,
     // The per-order basket-set agg and the frequent-item table are
-    // checkpointed (r18), so the plan keeps only the item-count agg off
+    // checkpointed, so the plan keeps only the item-count agg off
     // the checkpointed baskets + pair agg + output sort; pair generation
     // is a row-local sorted-array explode and the a-priori frequent set +
     // count joins are broadcasts of the checkpointed relation.
     "q_assoc_rules" -> 3,
     // bm25 postings-bounded tf agg + per-doc agg + the two K-bounded
-    // collect-sort-posexplode rank folds (r17: each candidate list is
-    // built ONCE — the rank-count self-join re-executed both list
+    // collect-sort-posexplode rank folds (each candidate list is
+    // built ONCE — a rank-count self-join would re-execute both list
     // subtrees) + output sort; the dense side is TakeOrdered (no
     // exchange), the fusion full-outer runs on two 25-row lists.
     "q_search_rrf" -> 5,
@@ -814,7 +808,7 @@ object PlanAuditSpec {
     // pass and broadcast back to users. Both the skinny per-user relation
     // AND the quartile map are eager localCheckpoints, so the surfaced
     // plan is checkpoint-scan ⋈ three broadcasts + the output sort — one
-    // exchange (r11 probe; was 5 before the qmap checkpoint landed).
+    // exchange (5 without the qmap checkpoint).
     "q_events_rfm" -> 1,
     // token-count agg (map-side combined) + the doc-tokens⋈bits token
     // exchange pair feeding the per-doc agg into TakeOrdered.
@@ -838,8 +832,8 @@ object PlanAuditSpec {
     "q_profile_joinsize" -> 6,
     // one groupBy(user) flag pass + the 1-row exact+sketch fold.
     "q_sketch_intersect" -> 2,
-    // 6 constraint checks off SHARED per-key count relations (r17:
-    // lineitem pays 2 scans, not 5 — pk_lineitem and fk_li_orders read
+    // 6 constraint checks off SHARED per-key count relations
+    // (lineitem pays 2 scans, not 5 — pk_lineitem and fk_li_orders read
     // one (orderkey, linenumber) agg, FK n_rows is Σc of the same join
     // output) + keys-vs-keys left aligns + 1-row folds + the 6-row
     // output sort — every exchange keys-sized or 1-row; fact rows never
@@ -853,7 +847,7 @@ object PlanAuditSpec {
     // join is a broadcast whose exchange feeds the DPP subquery.
     "q_join_dpp" -> 3,
     // one per-type agg over the parsed-once variant scan + output sort.
-    "q_json_variant" -> 3, // +1 r11: count(distinct vtype) heterogeneity guard
+    "q_json_variant" -> 3, // +1: count(distinct vtype) heterogeneity guard
     // each: ONE grouped agg + output sort — the pipe parse, the inlined
     // SQL-UDF body, and the collated comparison all stay inside the
     // same two-exchange agg shape as their classic twins.
@@ -877,14 +871,14 @@ object PlanAuditSpec {
     // margin⋈gold exchange pair + the |bins|-sized agg/sort.
     "q_eval_calibration" -> 3,
     // BM25's postings shuffle + the K-bounded collect-sort-posexplode
-    // rank fold (r18: the rank-count self-join re-executed the bm25
+    // rank fold (a rank-count self-join would re-execute the bm25
     // subtree for both sides), the checkpointed graded-relevance
-    // relation (r18: its three consumers re-ran classifier inference),
+    // relation (its three consumers would re-run classifier inference),
     // and the ≤10-row cumulative-k / ideal-list algebra — every
     // post-BM25 exchange carries a K- or grade-bounded relation, never
     // the corpus.
     "q_eval_ndcg" -> 11,
-    // ONE user window pass consumed once (r17: transitions collapse
+    // ONE user window pass consumed once (transitions collapse
     // straight to (from,to) train/eval counts; the rank window and the
     // hit scoring both run on that tiny relation — no second window
     // sort), + from-type rank window + final agg/sort.

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derives ×N corpora from an existing sf dir WITHOUT touching the
@@ -57,7 +57,7 @@ object ScaleProbe {
     * cross-copy overlap is punctuation-only grams, noted in
     * SCALE_PROBE.md.
     *
-    * Affine, not rotation (r13 verdict item 4): rotation is
+    * Affine, not rotation: rotation is
     * order-preserving on byte values (+k except at the wrap), so
     * byte-ORDER statistics survive it — the multimodal aHash thresholds
     * each sampled byte against the payload mean, and under a uniform +k
@@ -88,14 +88,7 @@ object ScaleProbe {
     val factors = (if (args.length > 2) args(2) else "2,5,10")
       .split(",").map(_.trim.toInt).toSeq
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(32)
 
     def table(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew probe: measures the engine's answers to the classic 100 TB
@@ -54,22 +54,12 @@ object SkewProbe {
     val out = "/tmp/graft_skew/lineitem_hot_" +
       src.replaceAll("[^A-Za-z0-9._-]", "_") + ".parquet"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // The skew corpus exists to exercise the SHUFFLE join machinery:
-      // pin orders off the broadcast path so every config runs the same
-      // sort-merge/shuffle shape it would at a scale where the dim side
-      // no longer fits a broadcast.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The skew corpus exists to exercise the SHUFFLE join machinery:
+    // pin orders off the broadcast path so every config runs the same
+    // sort-merge/shuffle shape it would at a scale where the dim side
+    // no longer fits a broadcast.
+    val spark = graft.core.Sessions.local(cpus.toInt,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     import spark.implicits._
 
     // Derive once: hot key = the smallest orderkey (exists in orders);
@@ -112,11 +102,6 @@ object SkewProbe {
       val h = xxhash64(df.columns.map(col): _*)
       df.select(h.as("h")).agg(expr("bit_xor(h)")).head().getLong(0)
     }
-    def quiesce(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc(); Thread.sleep(100)
-    }
 
     val Tuned = Map(
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16MB",
@@ -144,7 +129,7 @@ object SkewProbe {
     // Equality gate first (one execution each), then timings.
     val sigs = configs.map { case (name, mk, split, tuned) =>
       setConf(split, tuned)
-      val v = sig(mk()); quiesce(); name -> v
+      val v = sig(mk()); Bench.quiesce(spark); name -> v
     }
     require(sigs.map(_._2).distinct.size == 1,
       s"skew configs disagree on values: $sigs")
@@ -153,7 +138,7 @@ object SkewProbe {
       setConf(split, tuned)
       sig(mk()) // warm
       val ts = (1 to runs).map { _ =>
-        quiesce()
+        Bench.quiesce(spark)
         val t0 = System.nanoTime(); sig(mk()); (System.nanoTime() - t0) / 1e9
       }.sorted
       name -> ts(ts.length / 2)

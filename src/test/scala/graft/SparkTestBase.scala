@@ -8,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sessions are expensive; getOrCreate makes the suite order-independent). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Sessions.local(4)
 
   val Sf0001 = "/root/testdata/sf0.001"
 

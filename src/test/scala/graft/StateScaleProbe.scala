@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -25,8 +24,8 @@ import org.apache.spark.sql.streaming.OutputMode
   *    rows must plateau and shrink as the watermark closes windows,
   *    never track corpus size.
   *
-  * The corpus NEVER materializes on the driver (the r13 verdict's probe
-  * finding: a `.collect()` feed capped the probe at whatever fits in
+  * The corpus NEVER materializes on the driver (a `.collect()` feed
+  * would cap the probe at whatever fits in
   * driver memory — the exact anti-pattern the engine under test
   * avoids). Instead a one-time distributed staging pass splits the
   * corpus into nChunks chronological parquet slices (chunk = uniform
@@ -46,17 +45,9 @@ object StateScaleProbe {
     val dir = if (args.length > 0) args(0) else "/tmp/graft_scale/x10"
     val nChunks = if (args.length > 1) args(1).toInt else 10
 
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
+    val spark = graft.core.Sessions.local(32,
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     import graft.streaming.EventsStreaming
     import EventsStreaming.Event

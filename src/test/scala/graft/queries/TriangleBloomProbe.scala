@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{SparkSession, functions}
+import org.apache.spark.sql.functions
 
-/** Timing/equality probe for the r15 partitioned closure bloom in
+/** Timing/equality probe for the partitioned closure bloom in
   * `q_graph_triangles` (Graph.trianglesWithBloomBucketItems).
   *
   * The default plan keeps ONE exactly-sized bloom until ~64M oriented
@@ -24,37 +24,18 @@ import org.apache.spark.sql.{SparkSession, functions}
   */
 object TriangleBloomProbe {
 
-  private def quiesce(s: SparkSession): Unit = {
-    s.catalog.clearCache()
-    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    // Destroy the previous run's broadcast bucket blooms eagerly — each
-    // multi-bucket plan construction registers one (r15 advisor).
-    graft.core.Broadcasts.drain()
-    System.gc()
-    Thread.sleep(200)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val runs = if (args.length > 1) args(1).toInt else 3
     // Config tokens: a plain integer N = N buckets under the PRODUCTION
     // transport rule (scalar literal iff one bucket and edges <= the
     // TriangleScalarMaxEdges threshold); "1b" = one bucket with the
-    // broadcast transport FORCED, so the r16 transport A/B can separate
+    // broadcast transport FORCED, so a transport A/B can separate
     // transport cost from bucket-count cost.
     val bucketCounts = (if (args.length > 2) args(2) else "1,4,16")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
 
     // Each undirected edge sits in both endpoints' neighbor arrays.
     val edgeRows = Graph.symAdjacency(spark, sfDir)
@@ -73,7 +54,7 @@ object TriangleBloomProbe {
       // Report the bucket count the plan ACTUALLY derives from `items`
       // (same ceil-div as Graph) — for nb > edgeRows or rounding at tiny
       // corpora the requested and effective counts differ, and the JSON
-      // label must not claim buckets that never existed (r15 advisor).
+      // label must not claim buckets that never existed.
       val effNb = math.max(1L, (edgeRows + items - 1) / items).toInt
       // Untimed warmup (codegen + checkpoint), then timed medians.
       val scalarMax =
@@ -83,10 +64,10 @@ object TriangleBloomProbe {
           spark, sfDir, items, scalarMax).collect()
         row(0).getLong(0)
       }
-      quiesce(spark)
+      graft.Bench.quiesce(spark)
       val tri = once()
       val times = (1 to runs).map { _ =>
-        quiesce(spark)
+        graft.Bench.quiesce(spark)
         val t0 = System.nanoTime()
         val t = once()
         require(t == tri, s"triangle count drift: $t != $tri (nb=$nb)")
