@@ -16,10 +16,6 @@ import org.apache.spark.sql.types.StructType
   * and prune columns into the parquet reader.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** The parquet confs that change the schema Spark infers from a footer. */
   private val InferenceConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong",
@@ -90,13 +86,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register every testdata table as a temp view for `spark.sql` queries.
-    * Uses the normalizing loaders (not the raw scans) so SQL consumers see
-    * the same canonical `events.ts` type as the DataFrame API. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach { n =>
-      val df = if (n == "events") events(spark, dir) else load(spark, dir, n)
-      df.createOrReplaceTempView(n)
-    }
 }

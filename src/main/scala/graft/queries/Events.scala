@@ -3,15 +3,24 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.AsOfJoin
 
 import graft.core.Tables
+import graft.streaming.EventsStreaming
 import Catalog._
 
 /** Time-window semantics over the `events` stream table, run in BATCH mode
-  * so the DuckDB oracle can check them — the same operators
-  * (`window`, `session_window`) run under Structured Streaming in
-  * [[graft.streaming.EventsStreaming]]; this batch-equivalence pair is the
-  * oracle strategy SURVEY.md §2B declares for the streaming rows.
+  * so the DuckDB oracle can check them — the oracle strategy SURVEY.md §2B
+  * declares for the streaming rows.
+  *
+  * Shared-code contract: the window, session and stream-join rows
+  * (`q_events_tumbling`, `q_events_sliding`, `q_events_session`,
+  * `q_events_trending`, `q_events_view_click`,
+  * `q_events_view_click_outer`) build no aggregate or join of their own:
+  * each calls its [[graft.streaming.EventsStreaming]] transform on the
+  * batch `events` table, so the oracle checks the code Structured
+  * Streaming runs. The five native as-of rows share one backward and one
+  * forward base ([[backwardAsOf]], [[forwardAsOf]]).
   *
   * Scale notes: tumbling/sliding aggs shuffle once on (window, key) with
   * map-side partial aggregation; session windows shuffle once on user_id.
@@ -20,46 +29,35 @@ import Catalog._
   */
 object Events extends QueryGroup {
 
-  /** Tumbling 5-minute windows per event type. */
+  /** Tumbling 5-minute count and value sum per event type. */
   private def tumbling(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, d)
-      .groupBy(window($"ts", "5 minutes").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"), dsum($"value").as("sum_value"))
-      .select($"w.start".as("window_start"), $"event_type", $"n", $"sum_value")
+    EventsStreaming.tumblingCounts(Tables.events(s, d))
       .orderBy($"window_start", $"event_type")
   }
 
   /** Sliding 10-minute windows every 5 minutes (each event lands in 2). */
   private def sliding(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, d)
-      .groupBy(window($"ts", "10 minutes", "5 minutes").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"))
-      .select($"w.start".as("window_start"), $"event_type", $"n")
+    EventsStreaming.slidingCounts(Tables.events(s, d))
       .orderBy($"window_start", $"event_type")
   }
 
   /** Per-user session windows with a 5-minute inactivity gap. */
   private def session(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Tables.events(s, d)
-      .groupBy(session_window($"ts", "5 minutes").as("w"), $"user_id")
-      .agg(count(lit(1)).as("n_events"), dsum($"value").as("sum_value"))
-      .select($"user_id", $"w.start".as("session_start"),
-        $"w.end".as("session_end"), $"n_events", $"sum_value")
+    EventsStreaming.sessionCounts(Tables.events(s, d))
       .orderBy($"user_id", $"session_start")
   }
 
   /** View → click attribution counts per user, over the shared
     * stream-stream interval-join transform
-    * ([[graft.streaming.EventsStreaming.viewClickJoin]]) run in batch
-    * mode — same batch-equivalence oracle strategy as the window rows.
+    * ([[graft.streaming.EventsStreaming.viewClickJoin]]).
     * One shuffle on user_id for the join (both sides co-partition), one
     * partial-agg shuffle for the count. */
   private def viewClick(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.streaming.EventsStreaming.viewClickJoin(Tables.events(s, d))
+    EventsStreaming.viewClickJoin(Tables.events(s, d))
       .groupBy($"user_id")
       .agg(count(lit(1)).as("n_attributed"),
         countDistinct($"view_id").as("n_views_clicked"))
@@ -77,7 +75,7 @@ object Events extends QueryGroup {
     * shuffle, one partial-agg shuffle. */
   private def viewClickOuter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.streaming.EventsStreaming.viewClickJoinOuter(Tables.events(s, d))
+    EventsStreaming.viewClickJoinOuter(Tables.events(s, d))
       .groupBy($"user_id")
       .agg(countDistinct($"view_id").as("n_views"),
         count($"click_id").as("n_attributed"),
@@ -125,50 +123,65 @@ object Events extends QueryGroup {
       .orderBy($"event_id")
   }
 
-  /** The same point-in-time lookup through the NATIVE
-    * [[org.apache.spark.sql.graft.AsOfJoinExec]] operator (custom
-    * LogicalPlan + Strategy + SparkPlan, injected by GraftExtensions)
-    * instead of the union+window rewrite above: both sides co-partition
-    * and sort exactly like a sort-merge join, then one forward merge
-    * pass with O(1) task state — no union padding, no window buffer, no
-    * re-filter. Gated against the SAME DuckDB `ASOF LEFT JOIN` oracle as
-    * `q_join_asof`, so the two implementations are pinned equal. Ties
-    * (same user, same ts) are pre-collapsed to max(value) exactly like
-    * the oracle's `views` CTE — the operator's tie rule never fires. */
+  /** The probe side of a native as-of join: one event type's rows. */
+  private def ofType(ev: DataFrame, eventType: String): DataFrame =
+    ev.filter(col("event_type") === eventType)
+      .select(col("event_id"), col("user_id"), col("ts"))
+
+  /** Views collapsed to max(value) per (user, ts), exactly like the
+    * oracle's `views` CTE, so the operator's tie rule never fires.
+    * Renamed to `(user, ts, value)` so two copies can meet in one plan. */
+  private def latestViews(ev: DataFrame, user: String, ts: String,
+      value: String): DataFrame =
+    ev.filter(col("event_type") === "view")
+      .groupBy(col("user_id"), col("ts"))
+      .agg(max(col("value")).as(value))
+      .select(col("user_id").as(user), col("ts").as(ts), col(value))
+
+  /** Backward base of the native as-of rows: each click with the user's
+    * most recent view at or before it (`view_ts`, `view_value`), through
+    * the NATIVE [[org.apache.spark.sql.graft.AsOfJoinExec]] operator
+    * (custom LogicalPlan + Strategy + SparkPlan, injected by
+    * GraftExtensions) instead of the union+window rewrite above: both
+    * sides co-partition and sort exactly like a sort-merge join, then one
+    * forward merge pass with O(1) task state — no union padding, no
+    * window buffer, no re-filter. */
+  private def backwardAsOf(ev: DataFrame): DataFrame =
+    AsOfJoin.asofJoin(ofType(ev, "click"),
+      latestViews(ev, "v_user", "view_ts", "view_value"),
+      Seq("user_id"), Seq("v_user"), "ts", "view_ts")
+
+  /** Forward base: each view with the user's NEXT click at or after it
+    * (`click_ts`, `click_id`) — the "time to next action" /
+    * label-attribution shape (pandas merge_asof direction='forward').
+    * Same co-partition + sort as the backward exec; the forward merge
+    * carries zero buffered state (the lookahead row is the candidate).
+    * Clicks at equal (user, ts) are pre-collapsed to the smallest
+    * event_id, exactly like the oracle's CTE. */
+  private def forwardAsOf(ev: DataFrame): DataFrame = {
+    val clicks = ev.filter(col("event_type") === "click")
+      .groupBy(col("user_id"), col("ts"))
+      .agg(min(col("event_id")).as("click_id"))
+      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
+        col("click_id"))
+    AsOfJoin.asofJoin(ofType(ev, "view"), clicks, Seq("user_id"),
+      Seq("c_user"), "ts", "click_ts", forward = true)
+  }
+
+  /** The point-in-time lookup of `q_join_asof` as [[backwardAsOf]]. Gated
+    * against the SAME DuckDB `ASOF LEFT JOIN` oracle as `q_join_asof`, so
+    * the two implementations are pinned equal. */
   private def asofNative(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = Tables.events(s, d)
-    val views = ev.filter($"event_type" === "view")
-      .groupBy($"user_id", $"ts")
-      .agg(max($"value").as("view_value"))
-      .select($"user_id".as("v_user"), $"ts".as("view_ts"), $"view_value")
-    val clicks = ev.filter($"event_type" === "click")
-      .select($"event_id", $"user_id", $"ts")
-    org.apache.spark.sql.graft.AsOfJoin
-      .asofJoin(clicks, views, Seq("user_id"), Seq("v_user"), "ts", "view_ts")
+    backwardAsOf(Tables.events(s, d))
       .select($"event_id", $"user_id", $"ts", $"view_ts", $"view_value")
       .orderBy($"event_id")
   }
 
-  /** FORWARD as-of through the native operator: each view picks up the
-    * user's NEXT click at or after it — the "time to next action" /
-    * label-attribution shape (pandas merge_asof direction='forward').
-    * Same co-partition + sort as the backward exec; the forward merge
-    * carries zero buffered state (the lookahead row is the candidate).
-    * Ties among clicks at equal (user, ts) are pre-collapsed to the
-    * smallest event_id, exactly like the oracle's CTE. */
+  /** FORWARD as-of through the native operator: [[forwardAsOf]]. */
   private def asofForward(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = Tables.events(s, d)
-    val clicks = ev.filter($"event_type" === "click")
-      .groupBy($"user_id", $"ts")
-      .agg(min($"event_id").as("click_id"))
-      .select($"user_id".as("c_user"), $"ts".as("click_ts"), $"click_id")
-    val views = ev.filter($"event_type" === "view")
-      .select($"event_id", $"user_id", $"ts")
-    org.apache.spark.sql.graft.AsOfJoin
-      .asofJoin(views, clicks, Seq("user_id"), Seq("c_user"),
-        "ts", "click_ts", forward = true)
+    forwardAsOf(Tables.events(s, d))
       .select($"event_id", $"user_id", $"ts", $"click_ts", $"click_id")
       .orderBy($"event_id")
   }
@@ -181,22 +194,13 @@ object Events extends QueryGroup {
     * is at most [[AsofTtlSec]] old; a staler match is a MISSING feature
     * (nulled), not a usable one. The backward as-of result makes the
     * post-filter exact — if the latest prior view is stale, every
-    * earlier one is staler — so this is the native
-    * [[org.apache.spark.sql.graft.AsOfJoinExec]] plus one row-local
-    * freshness predicate on int64 micros; no extra shuffle over
-    * `q_join_asof_native`. The surfaced `fresh` bit keeps both
+    * earlier one is staler — so this is [[backwardAsOf]] plus one
+    * row-local freshness predicate on int64 micros; no extra shuffle
+    * over `q_join_asof_native`. The surfaced `fresh` bit keeps both
     * outcomes visible to the oracle. */
   private def asofTtl(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = Tables.events(s, d)
-    val views = ev.filter($"event_type" === "view")
-      .groupBy($"user_id", $"ts")
-      .agg(max($"value").as("view_value"))
-      .select($"user_id".as("v_user"), $"ts".as("view_ts"), $"view_value")
-    val clicks = ev.filter($"event_type" === "click")
-      .select($"event_id", $"user_id", $"ts")
-    org.apache.spark.sql.graft.AsOfJoin
-      .asofJoin(clicks, views, Seq("user_id"), Seq("v_user"), "ts", "view_ts")
+    backwardAsOf(Tables.events(s, d))
       .withColumn("fresh",
         $"view_ts".isNotNull &&
           unix_micros($"ts") - unix_micros($"view_ts") <=
@@ -218,22 +222,12 @@ object Events extends QueryGroup {
     * view (nulled), not a conversion. Forward symmetry of the backward
     * staleness argument makes the post-filter exact — if the next
     * click is beyond the horizon, every later one is further — so this
-    * is the native forward [[org.apache.spark.sql.graft.AsOfJoinExec]]
-    * plus one row-local int64-micros predicate; no extra shuffle over
-    * `q_join_asof_fwd`. The surfaced `attributed` bit keeps both
-    * outcomes visible to the oracle. */
+    * is [[forwardAsOf]] plus one row-local int64-micros predicate; no
+    * extra shuffle over `q_join_asof_fwd`. The surfaced `attributed` bit
+    * keeps both outcomes visible to the oracle. */
   private def asofTtlForward(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = Tables.events(s, d)
-    val clicks = ev.filter($"event_type" === "click")
-      .groupBy($"user_id", $"ts")
-      .agg(min($"event_id").as("click_id"))
-      .select($"user_id".as("c_user"), $"ts".as("click_ts"), $"click_id")
-    val views = ev.filter($"event_type" === "view")
-      .select($"event_id", $"user_id", $"ts")
-    org.apache.spark.sql.graft.AsOfJoin
-      .asofJoin(views, clicks, Seq("user_id"), Seq("c_user"),
-        "ts", "click_ts", forward = true)
+    forwardAsOf(Tables.events(s, d))
       .withColumn("attributed",
         $"click_ts".isNotNull &&
           unix_micros($"click_ts") - unix_micros($"ts") <=
@@ -253,25 +247,15 @@ object Events extends QueryGroup {
     * forward one over its output — plus one row-local int64-micros
     * pick; no new operator code, and the second pass finds its left
     * side already partitioned by user and sorted by ts (the exec's
-    * output ordering), so the compose adds no avoidable exchange.
-    * Views at equal (user, ts) are pre-collapsed to max(value), same
-    * as `q_join_asof_native`. */
+    * output ordering), so the compose adds no avoidable exchange. */
   private def asofNearest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, d)
-    def views(tsName: String, valName: String, key: String) =
-      ev.filter($"event_type" === "view")
-        .groupBy($"user_id", $"ts")
-        .agg(max($"value").as(valName))
-        .select($"user_id".as(key), $"ts".as(tsName), col(valName))
-    val clicks = ev.filter($"event_type" === "click")
-      .select($"event_id", $"user_id", $"ts")
-    val bwd = org.apache.spark.sql.graft.AsOfJoin
-      .asofJoin(clicks, views("bts", "bval", "b_user"),
-        Seq("user_id"), Seq("b_user"), "ts", "bts")
-    val both = org.apache.spark.sql.graft.AsOfJoin
-      .asofJoin(bwd, views("fts", "fval", "f_user"),
-        Seq("user_id"), Seq("f_user"), "ts", "fts", forward = true)
+    val bwd = AsOfJoin.asofJoin(ofType(ev, "click"),
+      latestViews(ev, "b_user", "bts", "bval"),
+      Seq("user_id"), Seq("b_user"), "ts", "bts")
+    val both = AsOfJoin.asofJoin(bwd, latestViews(ev, "f_user", "fts", "fval"),
+      Seq("user_id"), Seq("f_user"), "ts", "fts", forward = true)
     val takeBwd = $"fts".isNull || ($"bts".isNotNull &&
       unix_micros($"ts") - unix_micros($"bts") <=
         unix_micros($"fts") - unix_micros($"ts"))
@@ -348,8 +332,8 @@ object Events extends QueryGroup {
     * (window, type, n) relation only. */
   private def trending(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.streaming.EventsStreaming.trendingRank(
-      graft.streaming.EventsStreaming.slidingCounts(Tables.events(s, d)), 3)
+    EventsStreaming.trendingRank(
+      EventsStreaming.slidingCounts(Tables.events(s, d)), 3)
       .orderBy($"window_start", $"rnk")
   }
 

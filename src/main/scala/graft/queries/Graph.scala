@@ -202,7 +202,7 @@ object Graph extends QueryGroup {
   /** Per-bucket item capacity of the partitioned closure bloom. 64M
     * items ≈ 77 MB of bloom at 1% FP — large enough that every corpus
     * up to ~64M oriented edges keeps the single-bucket plan (bucket
-    * count 1 degenerates to exactly the r14 scalar-bloom probe), small
+    * count 1 degenerates to exactly the scalar-bloom probe), small
     * enough that each bucket's bit array stays far from the sketch
     * library's Int-indexed ceiling. The test seam
     * [[trianglesWithBloomBucketItems]] lowers this to force the
@@ -212,9 +212,9 @@ object Graph extends QueryGroup {
   /** Transport threshold for the single-bucket closure bloom: at or
     * under this many oriented edges the bloom ships as a scalar-subquery
     * plan literal; above it (and always when bucketed) it rides a real
-    * `Broadcast` probed by the codegen `bloom_bucket_probe`. The r16
-    * transport A/B (SCALE_PROBE.md r16 section) measured the literal
-    * plan fastest at 1.2M edges (sf0.1: 5.6 s vs 6.0 s broadcast) and
+    * `Broadcast` probed by the codegen `bloom_bucket_probe`. The transport
+    * A/B in SCALE_PROBE.md measured the literal plan fastest at 1.2M edges
+    * (sf0.1: 5.6 s vs 6.0 s broadcast) and
     * the broadcast plan fastest by ×10 (12M edges: 24.7 s literal vs
     * 19.7 s broadcast single-bucket / 19.2 s 4-bucket) — the literal's
     * per-task rehydration and non-codegen probe grow with bloom bytes
@@ -222,14 +222,14 @@ object Graph extends QueryGroup {
     * (~4.8 MB bloom) splits the two measured regimes. */
   private[queries] val TriangleScalarMaxEdges = 4000000L
 
-  /** EAGER-BUILD CONTRACT (r15/r16 advisors): whenever the BROADCAST
+  /** EAGER-BUILD CONTRACT: whenever the BROADCAST
     * transport is chosen — nBuckets > 1 OR edgeRows > `scalarMaxEdges`
     * (so also the common single-bucket regime between 4M and 64M edges) —
     * the per-bucket bloom-build jobs run DURING plan construction; this
     * method is not purely lazy there. Building the plan without executing
     * it still pays the bloom-build edge scans.
     *
-    * Staleness is defused by a SNAPSHOT FINGERPRINT (r16): construction
+    * Staleness is defused by a SNAPSHOT FINGERPRINT: construction
     * records (count, bit_xor(xxhash64(u, v))) of the materialized edge
     * relation in the same pass that sizes the buckets, and the returned
     * plan re-derives that pair per execution (a lazy 1-row aggregate
@@ -250,8 +250,8 @@ object Graph extends QueryGroup {
     * `scalarMaxEdges` the TRANSPORT threshold — a single-bucket bloom at
     * or under it ships as a scalar subquery (plan literal), anything else
     * rides a real Broadcast probed by the codegen `bloom_bucket_probe`.
-    * The r16 probe measures the two transports independently of bucket
-    * count this way (scalarMaxEdges=0 forces broadcast at one bucket;
+    * The transport probe measures the two transports independently of
+    * bucket count this way (scalarMaxEdges=0 forces broadcast at one bucket;
     * Long.MaxValue forces the literal plan wherever nBuckets == 1). */
   private[graft] def trianglesWithBloomConfig(
       s: SparkSession, d: String, bucketItems: Long,
@@ -307,7 +307,7 @@ object Graph extends QueryGroup {
     val perBucket = math.max(65536L, edgeRows / nBuckets * 6 / 5 + 1)
     // Per-invocation view names: two concurrent triangle runs on one
     // session must not race on create/drop of a shared name
-    // (ConcurrencySpec interleaves this query with itself since r13).
+    // (ConcurrencySpec interleaves this query with itself).
     // `gvn` is the checkpointed grouped adjacency (wedge generators read
     // it); `vn` is its row-local flat explode (bloom build + closure
     // side read it) — registering the derived view keeps the SQL below

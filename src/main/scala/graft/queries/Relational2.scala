@@ -9,8 +9,8 @@ import org.apache.spark.sql.graft.MoneyDecimal.moneyDecimal
 import graft.core.Tables
 import Catalog._
 
-/** Second relational sweep — closes the §2B rows the round-2 verdict marked
-  * partial: IN/LIKE/null-test filters, right outer join, GROUPING SETS,
+/** Second relational sweep — the §2B rows beyond the first sweep:
+  * IN/LIKE/null-test filters, right outer join, GROUPING SETS,
   * rangeBetween frames, UNION distinct, by-key dropDuplicates, the
   * approx aggregates (rows-only — approximate results have no exact
   * oracle), the spark.sql string API, and pivot/unpivot. */
@@ -168,12 +168,12 @@ object Relational2 extends QueryGroup {
     * edges can't flap the bit). The oracle emits `1 AS ok`, so a
     * drifting sketch or percentile implementation FAILS the hash gate
     * instead of hiding behind a rows-only check. */
-  /** r11 rework, 6.7 s → 2.7 s at sf0.1 with the same output: the old
-    * single agg mixed countDistinct (Expand-rewritten) with the
+  /** Three legs, 2.7 s at sf0.1 (one single agg: 6.7 s, same output).
+    * A single agg mixes countDistinct (Expand-rewritten) with the
     * imperative percentile/HLL buffers, forcing the WHOLE aggregation
-    * down the sort-based fallback over 2x-expanded input — and its
-    * exact `percentile()` envelope built per-group value maps, the
-    * memory hazard `q_quantile_global` exists to avoid. Now three
+    * down the sort-based fallback over 2x-expanded input — and an
+    * exact `percentile()` envelope builds per-group value maps, the
+    * memory hazard `q_quantile_global` exists to avoid. So: three
     * fast-path legs over the cents-quantized scan, broadcast-joined at
     * 3 rows each: sketch agg, two-phase exact-distinct agg, and a
     * discrete rank envelope — lo/hi = first value whose cumulative
@@ -181,13 +181,12 @@ object Relational2 extends QueryGroup {
     * percentile_approx's ±0.001-rank guarantee since the approx result
     * is always an observed value.
     *
-    * r15 envelope rework, same values: the (flag, cents) counts
-    * relation barely collapsed (~594k of 600k rows at sf0.1 — cents
-    * are near-unique), so its cumulative window SORTED the whole
-    * column, the query's dominant cost (1.2 of 1.9 s standalone). The
-    * envelope is really 4 order statistics per flag, so it now uses the
-    * same two-phase selection as `q_quantile_global`, partitioned by
-    * flag: a 4096-cent-bin histogram (a few thousand bins — the
+    * Envelope: the (flag, cents) counts relation barely collapses
+    * (~594k of 600k rows at sf0.1 — cents are near-unique), so a
+    * cumulative window over it SORTS the whole column (1.2 of 1.9 s
+    * standalone). The envelope is really 4 order statistics per flag, so
+    * it uses the same two-phase selection as `q_quantile_global`,
+    * partitioned by flag: a 4096-cent-bin histogram (a few thousand bins — the
     * cumulative window sorts bins, not rows), rank → hit bin via a
     * broadcast join, and a second scan that ranks ONLY the rows landing
     * in a hit bin (~bin occupancy each). min-c-with-cum·100 ≥ n·p is
@@ -300,7 +299,7 @@ object Relational2 extends QueryGroup {
   }
 
   /** Hot-key-targeted salted join ([[graft.operators.SkewJoin.saltedJoinHotKeys]])
-    * surfaced as a catalog query — the production skew form. The r16 ×100
+    * surfaced as a catalog query — the production skew form. The ×100
     * skew probe (SCALE_PROBE.md "join-skew probe") measured the blanket
     * twin above as the WORST plan at scale (whole-dim ×salts replication,
     * 80.0 s) while this targeted form — only the Zipf-head keys salt, the
@@ -309,18 +308,17 @@ object Relational2 extends QueryGroup {
     * 100 TB run would derive it: one map-side Misra-Gries pass
     * ([[graft.operators.MisraGries.topKeys]] — O(capacity) state per
     * task, a single-row collect, NO key-domain shuffle and NO global
-    * sort; the r17 verdict flagged the previous full
-    * groupBy-count + orderBy + limit derivation as the first plan that
-    * worked, not the scale plan). MG ranking is approximate near ties,
+    * sort; a full groupBy-count + orderBy + limit derivation works,
+    * but is not the scale plan). MG ranking is approximate near ties,
     * which is safe by construction: the hot list only changes the join's
     * partitioning, never its rows — so the oracle is the PLAIN join,
     * identical to the blanket twin's.
     *
-    * Honesty note (r18 A/B): the test corpus has NO real Zipf head (max
+    * Honesty note (A/B): the test corpus has NO real Zipf head (max
     * key frequency ≪ n/65), so MG correctly finds no guaranteed-heavy
     * key and its 4 survivors are arbitrary low-count stragglers — the
-    * exact-top-4 of the r17 derivation was equally meaningless as "hot"
-    * there. On a corpus where salting actually matters (the r16 ×100
+    * exact-top-4 of a groupBy-count derivation is equally meaningless as
+    * "hot" there. On a corpus where salting actually matters (the ×100
     * skew probe's Zipf head), the head keys exceed the MG threshold and
     * are GUARANTEED present. Derivation cost measured 0.28 s (MG) vs
     * 0.23 s (full groupBy+sort) at sf0.1 — the +0.05 s buys the
@@ -333,9 +331,9 @@ object Relational2 extends QueryGroup {
     // The Zipf head: top-4 customers by approximate order count. MG may
     // return FEWER than 4 — including zero: on a near-uniform key
     // distribution every count is below n/(capacity+1) and the
-    // decrement/merge steps can empty the summary entirely (the r18
-    // ×10 sweep hit exactly that — 1.5M near-singleton keys). An empty
-    // verdict means "no heavy hitters", and the production response is
+    // decrement/merge steps can empty the summary entirely (the ×10
+    // sweep hit exactly that — 1.5M near-singleton keys). An empty
+    // summary means "no heavy hitters", and the production response is
     // to NOT salt: join plain, same rows either way.
     val hot: Seq[Any] = graft.operators.MisraGries
       .topKeys(Tables.orders(s, d), $"o_custkey", k = 4, capacity = 64)
@@ -381,7 +379,7 @@ object Relational2 extends QueryGroup {
   private def aggMedianWeighted(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // Two-phase bucketed prefix sum (the operators/Packing pattern
-    // applied to an order statistic): the r12 ×100 probe caught the
+    // applied to an order statistic): the ×100 probe caught the
     // original single-window form super-linear (6.8 s → 117 s, exponent
     // 1.24) — with 3 flags, Window.partitionBy(flag) was 3 single-task
     // ~20M-row spilling sorts, a real 100 TB scale-killer for few-group
@@ -398,7 +396,7 @@ object Relational2 extends QueryGroup {
     // deterministic and the oracle spec unchanged. */
     // Phase 0: collapse to per-(flag, price) weights — map-side combined,
     // spread across the full key space; bounds ride the same pass shape.
-    // NOT checkpointed (r18 negative result): the collapsed relation has
+    // NOT checkpointed (measured, no gain): the collapsed relation has
     // three consumers, but AQE's runtime stage reuse already shares the
     // (flag, price) exchange among them — the interleaved A/B priced a
     // localCheckpoint at 0.99× (flat), and at scale it would pin an

@@ -298,15 +298,4 @@ object HttpIngest {
         }
       }
   }
-
-  /** S11-S13 sink: partitioned parquet by (term, location, ingest date). */
-  def writePartitioned(listings: Dataset[JobListing], term: String,
-      location: String, date: String, outDir: String): Unit =
-    listings.toDF()
-      .withColumn("search_term", org.apache.spark.sql.functions.lit(term))
-      .withColumn("location", org.apache.spark.sql.functions.lit(location))
-      .withColumn("ingest_date", org.apache.spark.sql.functions.lit(date))
-      .write.mode("append")
-      .partitionBy("search_term", "location", "ingest_date")
-      .parquet(outDir)
 }

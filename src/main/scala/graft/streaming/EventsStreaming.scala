@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.pipelines.Populate
+import graft.queries.Catalog.dsum
 
 /** Structured-Streaming surface over event streams — SURVEY.md §2B streaming
   * rows. The reference's "stream" is a daily-batch file cadence
@@ -16,9 +17,19 @@ import graft.pipelines.Populate
   * file/memory source → watermarked windowed aggregation / session windows /
   * stateful dedup / custom state → foreachBatch upsert sink.
   *
-  * Each transform takes and returns DataFrames so the SAME code runs in
-  * batch mode (oracle-checked in [[graft.queries.Events]]) and under
-  * `readStream` (behaviorally tested with MemoryStream in StreamingSpec).
+  * Shared-code contract: each DataFrame transform here is the ONE
+  * implementation of its event-time concept, and the catalog rows in
+  * [[graft.queries.Events]] call it on the batch `events` table, so the
+  * DuckDB oracle checks the same code `readStream` runs:
+  *  - [[tumblingCounts]], [[slidingCounts]], [[sessionCounts]]:
+  *    `q_events_tumbling`, `q_events_sliding`, `q_events_session` (the
+  *    row adds only its `orderBy`);
+  *  - [[slidingCounts]] + [[trendingRank]]: `q_events_trending`;
+  *  - [[viewClickJoin]], [[viewClickJoinOuter]]: `q_events_view_click`,
+  *    `q_events_view_click_outer` (the row adds a per-user count).
+  * In batch, `withWatermark` is a no-op Spark drops from the plan.
+  * StreamingSpec feeds the same transforms through a MemoryStream and
+  * pins their closed-window rows equal to the catalog rows.
   *
   * Scale notes (1000-executor design point):
   *  - Every stateful op is keyed (window/event_type, user_id, event_id) —
@@ -43,14 +54,16 @@ object EventsStreaming {
   def fileSource(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(EventSchema).json(dir)
 
-  /** Tumbling 5-minute counts with a 10-minute watermark — late events
-    * beyond the watermark are dropped (behavioral test pins this). */
+  /** Tumbling 5-minute count and exact value sum per event type with a
+    * 10-minute watermark — late events beyond the watermark are dropped
+    * (behavioral test pins this). */
   def tumblingCounts(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"))
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
+      .select(col("w.start").as("window_start"), col("event_type"), col("n"),
+        col("sum_value"))
 
   /** Sliding 10/5-minute counts per event type under a watermark — the
     * state side of a trending-items feed (each event lands in 2 windows;
@@ -87,14 +100,17 @@ object EventsStreaming {
   def staticEnrich(events: DataFrame, dim: DataFrame): DataFrame =
     events.join(broadcast(dim), Seq("event_type"), "left")
 
-  /** Per-user session windows (5-minute gap) under a watermark. */
+  /** Per-user session windows (5-minute gap: a session ends 5 minutes
+    * after its last event) with event count and exact value sum, under a
+    * watermark. A late event within the watermark merges into the
+    * session it falls in, also across micro-batches. */
   def sessionCounts(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), "5 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
+      .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"))
+        col("w.end").as("session_end"), col("n_events"), col("sum_value"))
 
   /** Stateful exact dedup by event_id, state bounded by the watermark
     * (replaces an unbounded dropDuplicates at stream scale). */
@@ -144,13 +160,9 @@ object EventsStreaming {
         col("view_ts"), col("click_ts"))
   }
 
-  // ---- custom state: flatMapGroupsWithState sessionization ---------------
-
+  /** Typed event row for the Dataset (arbitrary-state) operators below. */
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
-  case class SessionState(start: Long, lastTs: Long, n: Int)
-  case class SessionOut(user_id: Long, session_start: Timestamp,
-      session_end: Timestamp, n_events: Int)
 
   // ---- Spark 4 arbitrary state: transformWithState EWMA ------------------
 
@@ -291,51 +303,6 @@ object EventsStreaming {
     events.groupByKey(_.user_id)
       .transformWithState(new AttributionProcessor(windowUs),
         TimeMode.None(), OutputMode.Update())
-  }
-
-  /** Custom sessionization via flatMapGroupsWithState: emits a session row
-    * once the user goes quiet past the gap (event-time timeout). The
-    * session_window operator covers the common case; this is the
-    * escape hatch for custom state machines (SURVEY §2B "custom state"). */
-  def sessionize(events: Dataset[Event],
-      gapMs: Long = 5 * 60 * 1000L): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event],
-         state: GroupState[SessionState]) =>
-          if (batch.isEmpty && state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(userId, new Timestamp(s.start),
-              new Timestamp(s.lastTs + gapMs), s.n))
-          } else {
-            val sorted = batch.toSeq.sortBy(_.ts.getTime)
-            var cur = state.getOption
-            val closed = Seq.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.lastTs < gapMs =>
-                  cur = Some(s.copy(lastTs = t, n = s.n + 1))
-                case Some(s) =>
-                  closed += SessionOut(userId, new Timestamp(s.start),
-                    new Timestamp(s.lastTs + gapMs), s.n)
-                  cur = Some(SessionState(t, t, 1))
-                case None =>
-                  cur = Some(SessionState(t, t, 1))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastTs + gapMs)
-            }
-            closed.result().iterator
-          }
-      }
   }
 
   case class AsOfBuffer(views: List[(Long, Double)]) // (epochMicros, value) asc

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.EventsStreaming
@@ -10,8 +11,9 @@ import graft.streaming.EventsStreaming.Event
 
 /** Behavioral tests for the Structured-Streaming surface (no oracle exists
   * for late-data semantics — SURVEY.md §5.2): watermark late-drop,
-  * stateful dedup, session windows, custom flatMapGroupsWithState
-  * sessionization, foreachBatch upsert. */
+  * stateful dedup, session windows, stream-equals-catalog equivalence,
+  * custom flatMapGroupsWithState / transformWithState state, foreachBatch
+  * upsert. */
 class StreamingSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -46,6 +48,51 @@ class StreamingSpec extends SparkTestBase {
       assert(rows("2024-01-01 10:05:00.0") == 1)
       assert(rows("2024-01-01 10:40:00.0") == 1)
     } finally q.stop()
+  }
+
+  test("tumbling, sliding and session streams equal their catalog rows " +
+      "once the watermark closes every window") {
+    // In ts order, so no event is late; three chunks, so windows and
+    // sessions must carry state across micro-batches.
+    val all = graft.core.Tables.events(spark, Sf0001)
+      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
+      .as[Event].collect()
+      .sortBy(e => (e.ts.getTime, e.event_id))
+    // A day past the last event: the watermark passes every window and
+    // session end of the corpus, while the flush event's own stay open.
+    val flush = ev(-1, new Timestamp(all.last.ts.getTime + 86400000L),
+      user = -1)
+    Seq(
+      ("q_events_tumbling", EventsStreaming.tumblingCounts _,
+        Seq("window_start", "event_type")),
+      ("q_events_sliding", EventsStreaming.slidingCounts _,
+        Seq("window_start", "event_type")),
+      ("q_events_session", EventsStreaming.sessionCounts _,
+        Seq("user_id", "session_start"))
+    ).foreach { case (row, transform, keys) =>
+      val input = MemoryStream[Event](spark)
+      val name = s"${row}_stream"
+      val q = transform(input.toDF())
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append).start()
+      try {
+        all.grouped((all.length + 2) / 3).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          q.processAllAvailable()
+        }
+        input.addData(flush)
+        q.processAllAvailable()
+        val streamed = spark.table(name).orderBy(keys.map(col): _*)
+          .collect().toSeq
+        val batch = SparkEntry.queries(row)(spark, Sf0001).collect().toSeq
+        assert(streamed.nonEmpty)
+        // The first differing (streamed, catalog) pair, not both tables.
+        val firstDiff = streamed.zipAll(batch, null, null)
+          .find { case (a, b) => a != b }
+        assert(firstDiff.isEmpty,
+          s"$row: ${streamed.size} streamed vs ${batch.size} catalog rows")
+      } finally q.stop()
+    }
   }
 
   test("stream-static join enriches events from a broadcast dimension") {
@@ -103,26 +150,6 @@ class StreamingSpec extends SparkTestBase {
         "2024-01-01 10:09:00.0", 3L)))
       assert(rows.contains(("2024-01-01 10:20:00.0",
         "2024-01-01 10:25:00.0", 1L)))
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessionization emits closed sessions") {
-    val input = MemoryStream[Event](spark)
-    val q = EventsStreaming.sessionize(input.toDS())
-      .writeStream.format("memory").queryName("fmgws")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(ev(1, ts(0)), ev(2, ts(2)))
-      q.processAllAvailable()
-      // New session for the same user; previous closes on arrival.
-      input.addData(ev(3, ts(30)))
-      q.processAllAvailable()
-      input.addData(ev(4, ts(59)))
-      q.processAllAvailable()
-      val rows = spark.table("fmgws")
-        .select("session_start", "n_events").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getInt(1))).toSet
-      assert(rows.contains(("2024-01-01 10:00:00.0", 2)))
     } finally q.stop()
   }
 
