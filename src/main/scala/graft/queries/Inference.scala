@@ -248,19 +248,19 @@ object Inference extends QueryGroup {
     *
     * Every piece is K-bounded algebra over skinny relations: positions
     * via the collect_list → sort_array → posexplode fold on the ONE-row
-    * K-bounded candidate list (the r17 searchRrf move: the earlier
-    * broadcast rank-count self-join re-executed the ENTIRE bm25 subtree
-    * for both sides — the r18 profile measured the whole bm25 pass
-    * (0.44 s) paid twice, plus the fold itself is cheaper than the
-    * self-join, 0.50 vs 0.61 s; sorting ascending on (-bm25, doc_id) is
-    * the same total order as the rank-count predicate), gains = rel ×
+    * K-bounded candidate list (as in searchRrf: a broadcast rank-count
+    * self-join re-executes the ENTIRE bm25 subtree for both sides, so
+    * the whole bm25 pass (0.44 s) is paid twice, and the fold itself is
+    * cheaper than the self-join, 0.50 vs 0.61 s; sorting ascending on
+    * (-bm25, doc_id) is the same total order as the rank-count
+    * predicate), gains = rel ×
     * the fixed-point discount table, cumulative-k and the ideal list
     * from ≤10×10-row broadcast joins; the ideal relevances come from
     * global grade counts (4 rows), never a sorted corpus. The graded
     * relevance relation is CHECKPOINTED once: it has three consumers
     * (retrieved gains + both sides of the grade-count self-join), each
-    * of which re-ran the classifier-inference scan (0.29 s × 3 in the
-    * r18 profile). ndcg_fp = 1e6·DCG@k div IDCG@k — exact integers end
+    * of which would re-run the classifier-inference scan (0.29 s × 3
+    * uncheckpointed). ndcg_fp = 1e6·DCG@k div IDCG@k — exact integers end
     * to end. */
   private def evalNdcg(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -318,13 +318,12 @@ object Inference extends QueryGroup {
     * window), and the pass is consumed ONCE: transitions collapse
     * immediately to per-(from, to) {train, eval} counts, so the model
     * ranking and the eval scoring both read the tiny |types|² relation
-    * downstream of a reused exchange. The r16 shape filtered the
-    * transition relation twice (model side / eval side); those branches
-    * only shared the exchange BELOW the window, so the window's sort ran
-    * twice — the r17 profile measured the whole query ≈ 2× the window
-    * pass. Every user contributes exactly one eval transition, so
-    * counting by (from, to) is equivalent to the per-eval-row max the
-    * r16 join computed. */
+    * downstream of a reused exchange. Filtering the transition relation
+    * twice (model side / eval side) instead would share only the
+    * exchange BELOW the window, so the window's sort would run twice
+    * (measured: the whole query ≈ 2× the window pass). Every user
+    * contributes exactly one eval transition, so counting by (from, to)
+    * is equivalent to a per-eval-row max over a join. */
   private def evalHitrate(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ordered = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
@@ -334,9 +333,9 @@ object Inference extends QueryGroup {
       // lead of a CONSTANT: null ⟺ past the partition end, NEVER a
       // present-but-NULL value — lead(event_type, 2) would misread a
       // user whose 3rd-from-last event has a NULL type as already at
-      // the end and mislabel the eval transition (r17 review; the
-      // generated corpora are null-free, so only this form stays
-      // positionally identical to the oracle's rn = n−1 on any data).
+      // the end and mislabel the eval transition (the generated corpora
+      // are null-free, so only this form stays positionally identical
+      // to the oracle's rn = n−1 on any data).
       .withColumn("is_eval", lead(lit(1), 2).over(ordered).isNull)
       .filter($"to_type".isNotNull)
       .groupBy($"event_type".as("from_type"), $"to_type")

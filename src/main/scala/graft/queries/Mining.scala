@@ -10,8 +10,8 @@ import graft.core.Checkpoints.MaterializeOps
 import graft.functions.TextFunctions._
 import Catalog._
 
-/** Pattern-mining + multi-criteria query operators — round-10 surface
-  * growth beyond SURVEY §2B's original matrix:
+/** Pattern-mining + multi-criteria query operators beyond SURVEY §2B's
+  * original matrix:
   *
   *  - `q_assoc_rules`: A-priori association-rule mining over co-purchase
   *    baskets (support / confidence / lift), the market-basket classic.
@@ -48,9 +48,9 @@ object Mining extends QueryGroup {
     * set (one groupBy-orderkey shuffle) and CHECKPOINTED — it has three
     * consumers (basket count, item counts, pair explode) and the
     * frequent-item table derived from it has four broadcast consumers;
-    * before the r18 checkpoint each consumer re-ran the collect_set
-    * aggregation (profile: 0.38 s/run, ~5 executions ≈ the whole 2.0 s
-    * query). Everything downstream derives from the checkpointed blocks
+    * uncheckpointed, each consumer re-runs the collect_set aggregation
+    * (measured: 0.38 s/run, ~5 executions ≈ the whole 2.0 s query).
+    * Everything downstream derives from the checkpointed blocks
     * without re-shuffling the fact table: item counts explode off the
     * basket arrays, the basket count is a 1-row fold, and pair
     * generation is ROW-LOCAL — a sorted-array upper-triangle explode
@@ -175,12 +175,12 @@ object Mining extends QueryGroup {
           .as("yi"))
     val sup = Tables.supplier(s, d).select($"s_suppkey", $"s_nationkey")
     val nat = Tables.nation(s, d).select($"n_nationkey", $"n_name")
-    // Finest-grain pre-aggregation (the r15 Expand-family discipline): the
+    // Finest-grain pre-aggregation (the Expand-family discipline): the
     // 600k-row (600M at sf100) hot path sums moments PER SUPPLIER in pure
     // int64 — a DECIMAL(38,0) agg buffer round-trips through BigInteger on
-    // every UnsafeRow update, which the r16 profile measured at 2.2× the
-    // cost of long sums (0.66 s vs 0.30 s at sf0.1). Per-supplier int64
-    // bounds (TPC-H scaling keeps rows/supplier ~600, SF-independent):
+    // every UnsafeRow update, measured at 2.2× the cost of long sums
+    // (0.66 s vs 0.30 s at sf0.1). Per-supplier int64 bounds (TPC-H
+    // scaling keeps rows/supplier ~600, SF-independent):
     // syy_s <= 600·(2e7)² = 2.4e17 « 2^63; sxy_s <= 600·1e9 = 6e11;
     // a violated bound throws under default-ANSI Spark 4 rather than
     // wrapping. The dec38 re-agg then runs over suppliers (60× fewer rows
@@ -282,12 +282,12 @@ object Mining extends QueryGroup {
     * with the position as the rank — NOT a window (no natural partition
     * key for the single implicit query, and a constant partition literal
     * folds away into exactly the global-window shape the plan audit
-    * bans), and NOT the r16 broadcast rank-count self-join, which
-    * re-executed the whole candidate-list subtree for BOTH join sides
-    * (the r17 profile measured q_search_rrf ≈ 2×bm25 + 2×cos_top: the
-    * list builds, run twice each, were the entire cost). The fusion join
-    * moves 2K rows. Ranks surface as nullable BIGINTs — null marks a doc
-    * one retriever missed (it still scores on the other list). */
+    * bans), and NOT a broadcast rank-count self-join, which re-executes
+    * the whole candidate-list subtree for BOTH join sides (measured:
+    * q_search_rrf ≈ 2×bm25 + 2×cos_top, the list builds run twice each
+    * being the entire cost). The fusion join moves 2K rows. Ranks
+    * surface as nullable BIGINTs — null marks a doc one retriever
+    * missed (it still scores on the other list). */
   private def searchRrf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // Sort ascending on (-score, id): score desc, id asc on ties — the

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,6 +33,30 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   def countJobs[A](body: => A): (A, Int) = {
     val (out, jobs, _) = countJobsAndTasks(body)
     (out, jobs)
+  }
+
+  /** Runs `body` and returns its result with the number of operating-system
+    * processes Hadoop's file systems started meanwhile: the
+    * `jdk.ProcessStart` events of an in-process JFR recording whose stack
+    * has an `org.apache.hadoop.fs` frame. Processes that other threads of
+    * the JVM start meanwhile (Spark's `rm -rf` deletes, say) are not
+    * counted. */
+  def countProcessStarts[A](body: => A): (A, Int) = {
+    val rec = new jdk.jfr.Recording
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      val out = body
+      rec.stop()
+      val file = java.nio.file.Files.createTempFile("process-starts", ".jfr")
+      try {
+        rec.dump(file)
+        (out, jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala
+          .count(e => e.getEventType.getName == "jdk.ProcessStart" &&
+            e.getStackTrace.getFrames.asScala.exists(
+              _.getMethod.getType.getName.startsWith("org.apache.hadoop.fs."))))
+      } finally java.nio.file.Files.delete(file)
+    } finally rec.close()
   }
 
   /** Runs `body` and returns its result with the number of Spark jobs

@@ -155,21 +155,15 @@ class StreamingSpec extends SparkTestBase {
 
   test("sliding windows assign each event to two 10/5-minute windows") {
     val input = MemoryStream[Event](spark)
-    val agg = input.toDF()
-      .withWatermark("ts", "10 minutes")
-      .groupBy(org.apache.spark.sql.functions
-        .window($"ts", "10 minutes", "5 minutes").as("w"))
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .select($"w.start".as("ws"), $"n")
-    val q = agg.writeStream.format("memory").queryName("sliding")
+    val q = EventsStreaming.slidingCounts(input.toDF())
+      .writeStream.format("memory").queryName("sliding")
       .outputMode(OutputMode.Append).start()
     try {
       input.addData(ev(1, ts(7))) // windows 10:00 and 10:05
       q.processAllAvailable()
       input.addData(ev(2, ts(59))) // advance watermark, close them
       q.processAllAvailable()
-      val rows = spark.table("sliding").collect()
+      val rows = spark.table("sliding").select("window_start", "n").collect()
         .map(r => (r.getTimestamp(0).toString, r.getLong(1))).toMap
       assert(rows("2024-01-01 10:00:00.0") == 1)
       assert(rows("2024-01-01 10:05:00.0") == 1)
